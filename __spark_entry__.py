@@ -62,7 +62,7 @@ from riskloc_spark.operators.similarity import (
     lsh_bucket_knn,
 )
 
-from riskloc_spark.functions.scores import add_surprise
+from riskloc_spark.functions.scores import add_ep_and_surprise
 from riskloc_spark.operators import graph as _graph_mod
 
 
@@ -1305,10 +1305,9 @@ def adtributor_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     from riskloc_spark.operators.adtributor import _scored_elements
 
     df = rca_events(spark, sf_dir)
-    # same merge -> EP -> surprise chain, through the operator's
-    # PERSISTED element frame: the EP/surprise scalar-total subqueries
-    # each re-derived the merge and the events aggregation otherwise
-    # (r16 plan audit: 32 Exchanges for this query's unpersisted form)
+    # same merge -> EP + surprise chain, through the operator's
+    # checkpointed element frame: the shared scalar-total subquery
+    # re-derived the merge and the events aggregation otherwise
     el = _scored_elements(df, RCA_ATTRIBUTES, derived=False)
     return el.select(
         "dimension",
@@ -2963,14 +2962,13 @@ def events_props_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rca_derived_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from riskloc_spark.operators.dedup import reuse_checkpoint
 
-    # checkpoint: derived EP + surprise run three scalar-total
-    # subqueries, each re-deriving the events aggregation otherwise (16
-    # base scans).  Lazy localCheckpoint instead of persist (r16): no
-    # unpersist hook exists for a returned frame, and the truncated
-    # lineage keeps every consumer's plan leaf-bounded.
+    # checkpoint: the shared raw totals and the Σep normalization are
+    # two scalar-total subqueries, each re-deriving the events
+    # aggregation otherwise.  Lazy localCheckpoint instead of persist
+    # (r16): no unpersist hook exists for a returned frame, and the
+    # truncated lineage keeps every consumer's plan leaf-bounded.
     df = reuse_checkpoint(rca_events_derived(spark, sf_dir))
-    df = add_explanatory_power(df, derived=True)
-    df = add_surprise(df, derived=True)
+    df = add_ep_and_surprise(df, derived=True)
     return df.select(
         "event_type",
         "hr",
@@ -3571,10 +3569,10 @@ def adtributor_elements_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     from riskloc_spark.operators.adtributor import _scored_elements
 
     df = rca_events_derived(spark, sf_dir)
-    # the derived chain runs THREE scalar-total subqueries (a/b totals,
-    # ep normalization, surprise totals) — through the operator's
-    # persisted element frame each reads the cache instead of
-    # re-deriving the merge + events aggregation (88 Exchanges before)
+    # the derived chain runs TWO scalar-total subqueries (the shared a/b
+    # totals, then the ep normalization) — through the operator's
+    # checkpointed element frame each reads it instead of re-deriving
+    # the merge + events aggregation
     el = _scored_elements(df, RCA_ATTRIBUTES, derived=True)
     return el.select(
         "dimension",
@@ -4030,11 +4028,9 @@ def pagerank_hosts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from riskloc_spark.operators.graph import pagerank
 
     d = load_table(spark, sf_dir, "documents")
-    # 57 nodes: width 8 avoids paying the session's shuffle width in
-    # empty-task scheduling (see pagerank's shuffle_partitions note)
+    # 57 nodes: an 8-wide edge set instead of the session's shuffle width
     return pagerank(
-        _pagerank_edges(d), "src", "dst", iterations=5,
-        shuffle_partitions=8,
+        _pagerank_edges(d), "src", "dst", iterations=5, partitions=8,
     )
 
 

@@ -8,6 +8,8 @@ the exact same frame in SQL.
 """
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,17 +46,31 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     )
 
 
-# (sf_dir, name) -> inferred StructType.  Schema METADATA only — never
-# rows, never results: footer inference costs a ~100 ms py4j/listing
-# round trip per spark.read.parquet call (measured; an explicit-schema
-# read is ~27 ms), and the bench pays it on every load_table of every
-# query run.  The first call per table still infers from the parquet
-# footer; later calls hand the recorded schema to the reader, which is
-# exactly the explicit-schema discipline a production job uses.  Each
-# call still returns a FRESH DataFrame (two load_table calls joined
-# against each other keep distinct plan ids — no ambiguous-self-join
-# hazard) and every action still scans the parquet input.
+# (sf_dir, name) -> (fingerprint, inferred StructType).  Schema METADATA
+# only — never rows, never results: footer inference costs a ~100 ms
+# py4j/listing round trip per spark.read.parquet call (measured; an
+# explicit-schema read is ~27 ms), and the bench pays it on every
+# load_table of every query run.  The first call per table infers from
+# the parquet footer; later calls hand the recorded schema to the
+# reader while the path's fingerprint is unchanged, so a table
+# rewritten in place is re-inferred.  Each call still returns a FRESH
+# DataFrame (two load_table calls joined against each other keep
+# distinct plan ids — no ambiguous-self-join hazard) and every action
+# still scans the parquet input.
 _SCHEMA_CACHE: dict = {}
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """(file, mtime_ns, size) of each file under a local parquet path;
+    None for a non-local path, which is then never cached."""
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs
+    )
+    try:
+        stats = [(f, os.stat(f)) for f in files]
+    except OSError:
+        return None
+    return tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats) or None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -64,13 +80,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # read as long via nanosAsLong and downcast; sub-microsecond
         # resolution is never needed here). Handle both.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (sf_dir, name)
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is not None:
-        df = spark.read.schema(cached).parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    fp = _fingerprint(path)
+    cached = _SCHEMA_CACHE.get((sf_dir, name))
+    if fp is not None and cached is not None and cached[0] == fp:
+        df = spark.read.schema(cached[1]).parquet(path)
     else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _SCHEMA_CACHE[key] = df.schema
+        df = spark.read.parquet(path)
+        if fp is not None:
+            _SCHEMA_CACHE[(sf_dir, name)] = (fp, df.schema)
     if name == "events" and dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn(
             "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))

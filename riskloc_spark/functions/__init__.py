@@ -1,5 +1,6 @@
 from riskloc_spark.functions.scores import (
     add_deviation_score,
+    add_ep_and_surprise,
     add_explanatory_power,
     add_partition,
     add_surprise,
@@ -9,6 +10,7 @@ from riskloc_spark.functions.scores import (
 
 __all__ = [
     "add_deviation_score",
+    "add_ep_and_surprise",
     "add_explanatory_power",
     "add_partition",
     "add_surprise",

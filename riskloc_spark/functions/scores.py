@@ -1,98 +1,172 @@
-"""Element scoring primitives (parity: reference utils/element_scores.py and
-algorithms/riskloc.py:12-47), re-expressed as declarative Spark column algebra.
+"""Element scoring formulas (parity: reference utils/element_scores.py and
+algorithms/riskloc.py:12-47).
 
-Global sums are computed with a single ``agg`` reduce and broadcast back via
-``crossJoin(broadcast(...))`` — this keeps every step partition-parallel (a
-``Window.partitionBy()`` with no keys would funnel 100 TB through one task).
+One definition per formula: deviation, EP, the surprise term, the cutoff
+pick, partition and weight are each plain arithmetic over their operands,
+shared by the distributed and the driver-side pandas paths. Operands are
+Spark Columns or pandas Series; ``where``/``log``/``abs``/``isnull`` come
+from the namespace the caller passes (``SPARK_OPS`` or ``NUMPY_OPS``). A
+total is a Column on Spark (crossJoined 1-row aggregate or window sum)
+and a float on pandas.
+
+Totals are computed once: EP and surprise share one raw-totals pass,
+``(A, F)`` plain or ``(Fa, Aa, Fb, Ab)`` derived; the derived EP's Σep is
+the only second-stage total. On Spark a total is one ``agg`` broadcast
+back via ``crossJoin(broadcast(...))``, never a key-less window (which
+would funnel the whole frame through one task).
 """
 from __future__ import annotations
 
 import math
+from types import SimpleNamespace
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _with_scalars(df: DataFrame, scalars: DataFrame) -> DataFrame:
-    """Attach a 1-row aggregate frame to every row (broadcast nested loop —
-    constant-size build side, no shuffle of ``df``)."""
-    return df.crossJoin(F.broadcast(scalars))
+def _np_log(x):
+    # log(0) / log(<0) land only in branches a ``where`` discards
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.log(x)
+
+
+SPARK_OPS = SimpleNamespace(
+    where=lambda cond, a, b: F.when(cond, a).otherwise(b),
+    log=F.log,
+    abs=F.abs,
+    isnull=lambda c: c.isNull(),
+)
+NUMPY_OPS = SimpleNamespace(where=np.where, log=_np_log, abs=np.abs, isnull=np.isnan)
+
+
+def measures(derived: bool) -> tuple[str, ...]:
+    """Raw measure columns of a leaf frame."""
+    if derived:
+        return ("real_a", "real_b", "predict_a", "predict_b")
+    return ("real", "predict")
+
+
+# --- formulas ---------------------------------------------------------------
+
+
+def deviation(ops, real, predict):
+    """2*(predict-real)/(predict+real), 0 where the denominator is 0
+    (ref utils/element_scores.py:58-65)."""
+    denom = predict + real
+    return ops.where(denom == 0, 0.0, 2.0 * (predict - real) / denom)
+
+
+def explanatory_power(col, tot, derived: bool):
+    """EP per row (ref utils/element_scores.py:4-26); ``col(m)`` is the
+    row's measure ``m`` and ``tot(m)`` its total. Plain: (real-predict)
+    / (A-F). Derived: the a/b split, BEFORE its Σep normalization."""
+    if derived:
+        Fa, Fb = tot("predict_a"), tot("predict_b")
+        n = (col("real_a") - col("predict_a")) * Fb - (
+            col("real_b") - col("predict_b")
+        ) * Fa
+        return n / (Fb * (Fb + col("real_b") - col("predict_b")))
+    return (col("real") - col("predict")) / (tot("real") - tot("predict"))
+
+
+def surprise_term(ops, real, predict, A, F_tot, n=1):
+    """One measure's JS-divergence-style surprise (ref
+    utils/element_scores.py:29-55) with p = predict/(F/n), q = real/(A/n).
+    The reference's nan_to_num (0*log(0) -> 0) is an explicit guard: a
+    side contributes 0 where it is 0 or where p+q is 0."""
+    p = predict / (F_tot / n)
+    q = real / (A / n)
+    p_term = ops.where((p == 0) | (p + q == 0), 0.0, p * ops.log(2.0 * p / (p + q)))
+    q_term = ops.where((q == 0) | (p + q == 0), 0.0, q * ops.log(2.0 * q / (p + q)))
+    return 0.5 * (p_term + q_term)
+
+
+def surprise(ops, col, tot, derived: bool, n=1):
+    """Row surprise: the plain term, or the a and b terms summed for
+    derived data; ``col``/``tot`` as in explanatory_power, ``n`` the
+    merged divide (number of merged dimensions)."""
+    terms = []
+    for side in ("_a", "_b") if derived else ("",):
+        r, p = "real" + side, "predict" + side
+        terms.append(surprise_term(ops, col(r), col(p), tot(r), tot(p), n))
+    return terms[0] if len(terms) == 1 else terms[0] + terms[1]
+
+
+def relative_n_remove(n_remove: int, n_distinct: int) -> int:
+    """``n_remove`` read as a percentage of the distinct deviations."""
+    return int(math.ceil(n_distinct * n_remove / 100))
+
+
+def pick_cutoff(smallest, largest) -> float:
+    """Cutoff from the two sorted ends of the distinct deviations (ref
+    algorithms/riskloc.py:35-47): ``smallest`` holds the n_remove+1
+    smallest, ``largest`` the n_remove+1 largest; the end nearer zero
+    wins, negated."""
+    return -min(max(smallest), min(largest), key=abs)
+
+
+def partition(ops, dev, cutoff: float):
+    """Anomaly flag 1/0 (ref algorithms/riskloc.py:20-32): the side of the
+    cutoff's sign is anomalous (a -0.0 cutoff points left)."""
+    anomaly_right = math.copysign(1, cutoff) > 0 if cutoff == 0 else cutoff >= 0
+    return ops.where(dev > cutoff if anomaly_right else dev < cutoff, 1, 0)
+
+
+def weight(ops, dev, real, predict, part, cutoff: float):
+    """Leaf weight in [0, 1] (ref algorithms/riskloc.py:12-17)."""
+    w = ops.abs(cutoff - dev)
+    w = ops.where((real == 0) & (predict == 0), 0.0, w)
+    w = ops.where(part == 1, ops.abs(dev), w)
+    return ops.where(w > 1.0, 1.0, w)
+
+
+# --- Spark frame transformations ---------------------------------------------
+
+
+def _add_element_scores(
+    df: DataFrame, derived: bool, merged_divide: int, names: tuple[str, ...]
+) -> DataFrame:
+    """Attach ``names`` (ep and/or surprise) from ONE raw-totals
+    aggregation (broadcast nested loop — constant-size build side, no
+    shuffle of ``df``)."""
+    totals = df.agg(*[F.sum(m).alias(f"__tot_{m}") for m in measures(derived)])
+    out = df.crossJoin(F.broadcast(totals))
+
+    def tot(m):
+        return F.col(f"__tot_{m}")
+
+    cols = {
+        "ep": explanatory_power(F.col, tot, derived),
+        "surprise": surprise(SPARK_OPS, F.col, tot, derived, merged_divide),
+    }
+    out = out.withColumns({n: cols[n] for n in names}).drop(*totals.columns)
+    if derived and "ep" in names:
+        ep_sum = out.agg(F.sum("ep").alias("__eps"))
+        out = out.crossJoin(F.broadcast(ep_sum))
+        out = out.withColumn("ep", F.col("ep") / F.col("__eps")).drop("__eps")
+    return out
 
 
 def add_explanatory_power(df: DataFrame, derived: bool = False) -> DataFrame:
-    """EP column (ref utils/element_scores.py:4-26).
-
-    Plain: ep = (real - predict) / (A - F) with A=sum(real), F=sum(predict).
-    Derived: ep via a/b measure split, normalized to sum to 1.
-    """
-    if derived:
-        totals = df.agg(
-            F.sum("predict_a").alias("__Fa"), F.sum("predict_b").alias("__Fb")
-        )
-        out = _with_scalars(df, totals)
-        n = (F.col("real_a") - F.col("predict_a")) * F.col("__Fb") - (
-            F.col("real_b") - F.col("predict_b")
-        ) * F.col("__Fa")
-        d = F.col("__Fb") * (F.col("__Fb") + F.col("real_b") - F.col("predict_b"))
-        out = out.withColumn("ep", n / d).drop("__Fa", "__Fb")
-        ep_sum = out.agg(F.sum("ep").alias("__eps"))
-        out = _with_scalars(out, ep_sum)
-        return out.withColumn("ep", F.col("ep") / F.col("__eps")).drop("__eps")
-
-    totals = df.agg(F.sum("real").alias("__A"), F.sum("predict").alias("__F"))
-    out = _with_scalars(df, totals)
-    return out.withColumn(
-        "ep", (F.col("real") - F.col("predict")) / (F.col("__A") - F.col("__F"))
-    ).drop("__A", "__F")
-
-
-def add_deviation_score(df: DataFrame) -> DataFrame:
-    """deviation = 2*(predict-real)/(predict+real), 0 where denom is 0
-    (ref utils/element_scores.py:58-65)."""
-    denom = F.col("predict") + F.col("real")
-    dev = F.when(denom == 0, F.lit(0.0)).otherwise(
-        2.0 * (F.col("predict") - F.col("real")) / denom
-    )
-    return df.withColumn("deviation", dev)
+    """``ep`` column; derived EP is normalized to sum to 1."""
+    return _add_element_scores(df, derived, 1, ("ep",))
 
 
 def add_surprise(df: DataFrame, derived: bool = False, merged_divide: int = 1) -> DataFrame:
-    """JS-divergence-style surprise (ref utils/element_scores.py:29-55).
+    """``surprise`` column."""
+    return _add_element_scores(df, derived, merged_divide, ("surprise",))
 
-    nan_to_num semantics of the reference (0*log(0) -> 0, p or q == 0 -> 0
-    contribution) are reproduced with explicit WHEN guards.
-    """
 
-    def surprise_term(real_col: str, predict_col: str, F_tot, A_tot):
-        p = F.col(predict_col) / (F_tot / merged_divide)
-        q = F.col(real_col) / (A_tot / merged_divide)
-        # p*log(2p/(p+q)): 0 when p==0; +/-inf -> nan_to_num -> large finite in
-        # numpy, but p,q >= 0 here so 2p/(p+q) is finite unless p+q==0.
-        p_term = F.when((p == 0) | (p + q == 0), F.lit(0.0)).otherwise(
-            p * F.log(2.0 * p / (p + q))
-        )
-        q_term = F.when((q == 0) | (p + q == 0), F.lit(0.0)).otherwise(
-            q * F.log(2.0 * q / (p + q))
-        )
-        return 0.5 * (p_term + q_term)
+def add_ep_and_surprise(
+    df: DataFrame, derived: bool = False, merged_divide: int = 1
+) -> DataFrame:
+    """``ep`` and ``surprise`` columns from one shared totals pass."""
+    return _add_element_scores(df, derived, merged_divide, ("ep", "surprise"))
 
-    if derived:
-        totals = df.agg(
-            F.sum("predict_a").alias("__Fa"),
-            F.sum("real_a").alias("__Aa"),
-            F.sum("predict_b").alias("__Fb"),
-            F.sum("real_b").alias("__Ab"),
-        )
-        out = _with_scalars(df, totals)
-        s = surprise_term("real_a", "predict_a", F.col("__Fa"), F.col("__Aa")) + surprise_term(
-            "real_b", "predict_b", F.col("__Fb"), F.col("__Ab")
-        )
-        return out.withColumn("surprise", s).drop("__Fa", "__Aa", "__Fb", "__Ab")
 
-    totals = df.agg(F.sum("predict").alias("__F"), F.sum("real").alias("__A"))
-    out = _with_scalars(df, totals)
-    s = surprise_term("real", "predict", F.col("__F"), F.col("__A"))
-    return out.withColumn("surprise", s).drop("__F", "__A")
+def add_deviation_score(df: DataFrame) -> DataFrame:
+    return df.withColumn("deviation", deviation(SPARK_OPS, F.col("real"), F.col("predict")))
 
 
 def get_cutoff(df: DataFrame, n_remove: int = 5, relative: bool = False) -> float:
@@ -105,8 +179,7 @@ def get_cutoff(df: DataFrame, n_remove: int = 5, relative: bool = False) -> floa
     """
     devs = df.select("deviation").distinct()
     if relative:
-        n_distinct = devs.count()
-        n_remove = int(math.ceil(n_distinct * n_remove / 100))
+        n_remove = relative_n_remove(n_remove, devs.count())
     k = n_remove + 1
     # both ends in ONE action: union the two TakeOrdered subtrees
     # (limit-after-sort never materializes a full sort) and tag the side
@@ -121,27 +194,19 @@ def get_cutoff(df: DataFrame, n_remove: int = 5, relative: bool = False) -> floa
         )
         .collect()
     )
-    smallest = [r["deviation"] for r in both if r["side"] == 0]
-    largest = [r["deviation"] for r in both if r["side"] == 1]
-    min_val = max(smallest)  # n_remove+1-th smallest
-    max_val = min(largest)  # n_remove+1-th largest
-    return -min(min_val, max_val, key=abs)
+    return pick_cutoff(
+        [r["deviation"] for r in both if r["side"] == 0],
+        [r["deviation"] for r in both if r["side"] == 1],
+    )
 
 
 def add_partition(df: DataFrame, cutoff: float) -> DataFrame:
-    """Anomaly partition flag (ref algorithms/riskloc.py:20-32)."""
-    anomaly_right = math.copysign(1, cutoff) > 0 if cutoff == 0 else cutoff >= 0
-    if anomaly_right:
-        part = F.when(F.col("deviation") > cutoff, 1).otherwise(0)
-    else:
-        part = F.when(F.col("deviation") < cutoff, 1).otherwise(0)
-    return df.withColumn("partition", part)
+    return df.withColumn("partition", partition(SPARK_OPS, F.col("deviation"), cutoff))
 
 
 def add_weight(df: DataFrame, cutoff: float) -> DataFrame:
-    """Leaf weight (ref algorithms/riskloc.py:12-17)."""
-    w = F.abs(F.lit(cutoff) - F.col("deviation"))
-    w = F.when((F.col("real") == 0) & (F.col("predict") == 0), F.lit(0.0)).otherwise(w)
-    w = F.when(F.col("partition") == 1, F.abs(F.col("deviation"))).otherwise(w)
-    w = F.when(w > 1.0, F.lit(1.0)).otherwise(w)
-    return df.withColumn("weight", w)
+    c = F.col
+    return df.withColumn(
+        "weight",
+        weight(SPARK_OPS, c("deviation"), c("real"), c("predict"), c("partition"), cutoff),
+    )

@@ -4,7 +4,10 @@ Parity: reference algorithms/adtributor.py:6-43 and
 rev_rec_adtributor.py:6-74. Fully declarative: the per-dimension element
 merge is a union of groupBy aggregates; candidate selection is a window
 cumsum over surprise-ordered elements. No driver-side leaf data — only the
-final (tiny) candidate sets are collected.
+final (tiny) candidate sets are collected. Element EP and surprise are the
+functions.scores definitions over one shared totals pass, on every path:
+crossJoined totals, per-branch window totals, and the pandas fast path of
+the recursive search.
 """
 from __future__ import annotations
 
@@ -13,7 +16,14 @@ from typing import Any
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from riskloc_spark.functions.scores import add_explanatory_power, add_surprise
+from riskloc_spark.functions.scores import (
+    NUMPY_OPS,
+    SPARK_OPS,
+    add_ep_and_surprise,
+    explanatory_power,
+    measures,
+    surprise,
+)
 
 
 def merge_dimensions(df: DataFrame, dimensions: list[str], derived: bool) -> DataFrame:
@@ -25,9 +35,7 @@ def merge_dimensions(df: DataFrame, dimensions: list[str], derived: bool) -> Dat
 
     Output: element (string), summed measures, dimension.
     """
-    measures = (
-        ["real_a", "real_b", "predict_a", "predict_b"] if derived else ["real", "predict"]
-    )
+    ms = measures(derived)
     structs = [
         F.struct(
             F.lit(d).alias("dimension"),
@@ -36,13 +44,13 @@ def merge_dimensions(df: DataFrame, dimensions: list[str], derived: bool) -> Dat
         for d in dimensions
     ]
     elements = (
-        df.select(F.explode(F.array(*structs)).alias("de"), *measures)
+        df.select(F.explode(F.array(*structs)).alias("de"), *ms)
         .groupBy(
             F.col("de.dimension").alias("dimension"),
             F.col("de.element").alias("element"),
         )
-        .agg(*[F.sum(m).alias(m) for m in measures])
-        .select("element", *measures, "dimension")
+        .agg(*[F.sum(m).alias(m) for m in ms])
+        .select("element", *ms, "dimension")
     )
     if derived:
         elements = elements.withColumn(
@@ -65,9 +73,7 @@ def _scored_elements(df: DataFrame, dimensions: list[str], derived: bool) -> Dat
     from riskloc_spark.operators.dedup import reuse_checkpoint
 
     elements = reuse_checkpoint(merge_dimensions(df, dimensions, derived))
-    elements = add_explanatory_power(elements, derived)
-    elements = add_surprise(elements, derived, merged_divide=len(dimensions))
-    return elements
+    return add_ep_and_surprise(elements, derived, merged_divide=len(dimensions))
 
 
 def adtributor_candidates(
@@ -197,44 +203,6 @@ def rev_adtributor_candidates(
     ).select("dimension", "element", "ep", "surprise")
 
 
-def rev_adtributor(
-    df: DataFrame,
-    dimensions: list[str],
-    teep: float = 0.1,
-    k: int = 3,
-    derived: bool = False,
-) -> list[dict[str, Any]]:
-    """Reference rev_rec_adtributor.py:15-34: all elements with ep > teep
-    form the candidate set, kept only if a strict subset of the dimension's
-    elements."""
-    elements = _scored_elements(df, dimensions, derived)
-    agg = (
-        elements.groupBy("dimension")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.when(F.col("ep") > teep, 1).otherwise(0)).alias("n_cand"),
-            F.sum(F.when(F.col("ep") > teep, F.col("ep"))).alias("explanatory_power"),
-            F.sum(F.when(F.col("ep") > teep, F.col("surprise"))).alias("surprise"),
-            F.sort_array(
-                F.collect_list(F.when(F.col("ep") > teep, F.col("element")))
-            ).alias("elements"),
-        )
-        .filter((F.col("n_cand") > 0) & (F.col("n_cand") < F.col("n_total")))
-        .orderBy(F.col("surprise").desc(), F.col("dimension").asc())
-        .limit(k)
-        .collect()
-    )
-    return [
-        {
-            "elements": list(row["elements"]),
-            "explanatory_power": row["explanatory_power"],
-            "surprise": row["surprise"],
-            "dimension": row["dimension"],
-        }
-        for row in agg
-    ]
-
-
 def _refine_and_dedupe(explanatory_set, dimensions, make_child):
     """Shared recursion body of rev_rec_adtributor (ref
     rev_rec_adtributor.py:37-74): drill each candidate element into the
@@ -277,66 +245,38 @@ def _refine_and_dedupe(explanatory_set, dimensions, make_child):
 
 
 # --------------------------------------------------------------------------
-# pandas mirror of the recursive search (adaptive driver fast-path, same
-# pattern as riskloc/autoroot/squeeze): the recursion launches a full
+# pandas recursive search (adaptive driver fast-path, same pattern as
+# riskloc/autoroot/squeeze): the recursion launches a full
 # element aggregation per candidate element per depth — dozens of tiny
 # sequential Spark jobs. When the leaf frame is driver-sized, the whole
 # recursion runs vectorized locally; parity-tested vs the distributed path.
 # --------------------------------------------------------------------------
 
 def _score_element_frame(el, n_dims: int, derived: bool):
-    """EP + surprise (merged_divide=n_dims) over a merged element frame
-    with summed measures — the scoring half of _scored_elements, shared
-    by the pandas fast-path and the fused distributed recursion."""
-    import numpy as np
-
+    """EP + surprise (merged_divide=n_dims) over a merged pandas element
+    frame with summed measures: the pandas half of _scored_elements."""
     if derived:
         el["predict"] = el["predict_a"] / el["predict_b"]
         el["real"] = el["real_a"] / el["real_b"]
-        Fa, Fb = el["predict_a"].sum(), el["predict_b"].sum()
-        n = (el["real_a"] - el["predict_a"]) * Fb - (el["real_b"] - el["predict_b"]) * Fa
-        d_ = Fb * (Fb + el["real_b"] - el["predict_b"])
-        ep = n / d_
-        el["ep"] = ep / ep.sum()
-    else:
-        A, Ff = el["real"].sum(), el["predict"].sum()
-        el["ep"] = (el["real"] - el["predict"]) / (A - Ff)
-
-    def surprise_term(real_col, predict_col, F_tot, A_tot):
-        p = el[predict_col] / (F_tot / n_dims)
-        q = el[real_col] / (A_tot / n_dims)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            p_term = np.where(
-                (p == 0) | (p + q == 0), 0.0, p * np.log(2.0 * p / (p + q))
-            )
-            q_term = np.where(
-                (q == 0) | (p + q == 0), 0.0, q * np.log(2.0 * q / (p + q))
-            )
-        return 0.5 * (p_term + q_term)
-
-    if derived:
-        el["surprise"] = surprise_term(
-            "real_a", "predict_a", el["predict_a"].sum(), el["real_a"].sum()
-        ) + surprise_term(
-            "real_b", "predict_b", el["predict_b"].sum(), el["real_b"].sum()
-        )
-    else:
-        el["surprise"] = surprise_term("real", "predict", Ff, A)
+    totals = {m: el[m].sum() for m in measures(derived)}
+    ep = explanatory_power(el.__getitem__, totals.__getitem__, derived)
+    el["ep"] = ep / ep.sum() if derived else ep
+    el["surprise"] = surprise(
+        NUMPY_OPS, el.__getitem__, totals.__getitem__, derived, n_dims
+    )
     return el
 
 
 def _scored_elements_pd(pdf, dimensions: list[str], derived: bool):
-    """pandas mirror of _scored_elements (merge_dimensions + EP + surprise
-    with merged_divide=len(dimensions)) — same formulas and guards."""
+    """_scored_elements on pandas: merge_dimensions, then EP + surprise
+    with merged_divide=len(dimensions)."""
     import pandas as pd
 
-    measures = (
-        ["real_a", "real_b", "predict_a", "predict_b"] if derived else ["real", "predict"]
-    )
+    ms = measures(derived)
     parts = []
     for d in dimensions:
         g = (
-            pdf.groupby(pdf[d].astype(str), sort=False)[measures]
+            pdf.groupby(pdf[d].astype(str), sort=False)[list(ms)]
             .sum()
             .reset_index(names="element")
         )
@@ -347,7 +287,7 @@ def _scored_elements_pd(pdf, dimensions: list[str], derived: bool):
 
 
 def _rev_candidates_from_elements(el, dimensions, teep, k):
-    """rev_adtributor candidate selection over a scored element frame:
+    """Rev-adtributor candidate selection over a scored element frame:
     ep > teep, strict subset of the dimension's elements, top-k dims by
     candidate surprise (dimension-asc tiebreak)."""
     causes = []
@@ -368,13 +308,9 @@ def _rev_candidates_from_elements(el, dimensions, teep, k):
     return causes[:k]
 
 
-def _rev_adtributor_pd(pdf, dimensions, teep, k, derived):
-    el = _scored_elements_pd(pdf, dimensions, derived)
-    return _rev_candidates_from_elements(el, dimensions, teep, k)
-
-
 def _rev_rec_adtributor_pd(pdf, dimensions, teep, k, derived):
-    explanatory_set = _rev_adtributor_pd(pdf, dimensions, teep, k, derived)
+    el = _scored_elements_pd(pdf, dimensions, derived)
+    explanatory_set = _rev_candidates_from_elements(el, dimensions, teep, k)
 
     def make_child(cand_set, element, remaining):
         sub = pdf[pdf[cand_set["dimension"]].astype(str) == element[0]]
@@ -390,8 +326,8 @@ def _rev_rec_distributed_fused(
     DEPTH (not per candidate element): every live branch's sub-frame
     element sums are computed together — each row fans out to one
     (branch, dim, value) struct per matching branch context. EP and
-    surprise are scored DISTRIBUTED (window sums per branch, mirroring
-    _score_element_frame), the ``ep > teep`` candidate filter applies
+    surprise are scored DISTRIBUTED (the functions.scores formulas over
+    per-branch window totals), the ``ep > teep`` candidate filter applies
     before any exchange to the driver, and a rank window caps the
     collect at ``max_candidates_per_dim`` rows per (branch, dimension) —
     so a user-id-like attribute with millions of elements collects at
@@ -406,9 +342,7 @@ def _rev_rec_distributed_fused(
     O(k * elements^depth) sequential aggregations before."""
     import copy
 
-    measures = (
-        ["real_a", "real_b", "predict_a", "predict_b"] if derived else ["real", "predict"]
-    )
+    ms = measures(derived)
 
     # node: (id, context [(dim, val), ...], dims list)
     nodes = {0: ([], sorted(dimensions))}
@@ -440,19 +374,19 @@ def _rev_rec_distributed_fused(
         el = (
             df.select(
                 F.explode(F.array(*structs)).alias("ce"),
-                *[F.col(m).cast("double").alias(m) for m in measures],
+                *[F.col(m).cast("double").alias(m) for m in ms],
             )
             .filter(F.col("ce").isNotNull())
             .groupBy("ce.nid", "ce.dim", "ce.element")
-            .agg(*[F.sum(m).alias(m) for m in measures])
+            .agg(*[F.sum(m).alias(m) for m in ms])
             .select(
-                F.col("nid"), F.col("dim"), F.col("element"), *measures
+                F.col("nid"), F.col("dim"), F.col("element"), *ms
             )
         )
 
-        # distributed mirror of _score_element_frame: per-branch totals
-        # via window sums (the old path collected the whole element frame
-        # and scored in pandas — unbounded for high-cardinality dims)
+        # per-branch totals via window sums (the old path collected the
+        # whole element frame and scored in pandas — unbounded for
+        # high-cardinality dims)
         w_nid = Window.partitionBy("nid")
         w_nd = Window.partitionBy("nid", "dim")
         # n_dims varies per branch; known on the driver -> literal map
@@ -465,41 +399,17 @@ def _rev_rec_distributed_fused(
         )
         nd = nd_map[F.col("nid")]
 
-        def sterm(rc, pc, Ftot, Atot):
-            p = F.col(pc) / (Ftot / nd)
-            q = F.col(rc) / (Atot / nd)
-            pt = F.when((p == 0) | (p + q == 0), F.lit(0.0)).otherwise(
-                p * F.log(2.0 * p / (p + q))
-            )
-            qt = F.when((q == 0) | (p + q == 0), F.lit(0.0)).otherwise(
-                q * F.log(2.0 * q / (p + q))
-            )
-            return 0.5 * (pt + qt)
+        def tot(m):
+            return F.sum(m).over(w_nid)
 
+        ep = explanatory_power(F.col, tot, derived)
         if derived:
-            Fa = F.sum("predict_a").over(w_nid)
-            Fb = F.sum("predict_b").over(w_nid)
-            Aa = F.sum("real_a").over(w_nid)
-            Ab = F.sum("real_b").over(w_nid)
-            n_ = (F.col("real_a") - F.col("predict_a")) * Fb - (
-                F.col("real_b") - F.col("predict_b")
-            ) * Fa
-            d_ = Fb * (Fb + F.col("real_b") - F.col("predict_b"))
-            el = el.withColumn("__ept", n_ / d_)
-            el = el.withColumn(
-                "ep", F.col("__ept") / F.sum("__ept").over(w_nid)
-            )
-            surprise = sterm("real_a", "predict_a", Fa, Aa) + sterm(
-                "real_b", "predict_b", Fb, Ab
-            )
-        else:
-            A = F.sum("real").over(w_nid)
-            Ff = F.sum("predict").over(w_nid)
-            el = el.withColumn(
-                "ep", (F.col("real") - F.col("predict")) / (A - Ff)
-            )
-            surprise = sterm("real", "predict", Ff, A)
-        el = el.withColumn("surprise", surprise).withColumn(
+            el = el.withColumn("__ept", ep)
+            ep = F.col("__ept") / F.sum("__ept").over(w_nid)
+        el = el.withColumn("ep", ep)
+        el = el.withColumn(
+            "surprise", surprise(SPARK_OPS, F.col, tot, derived, nd)
+        ).withColumn(
             "__ng", F.count(F.lit(1)).over(w_nd)
         )
 
@@ -598,15 +508,11 @@ def rev_rec_adtributor(
     recursion body (_refine_and_dedupe) and the candidate-selection /
     scoring code, and are parity-tested."""
     if driver_rows is not None:
-        measures = (
-            ["real_a", "real_b", "predict_a", "predict_b"]
-            if derived
-            else ["real", "predict"]
-        )
+        ms = measures(derived)
         sel = df.select(
             *[F.coalesce(F.col(a).cast("string"), F.lit("None")).alias(a)
               for a in dimensions],
-            *[F.col(m).cast("double").alias(m) for m in measures],
+            *[F.col(m).cast("double").alias(m) for m in ms],
         )
         pdf = sel.limit(driver_rows + 1).toPandas()
         if len(pdf) <= driver_rows:

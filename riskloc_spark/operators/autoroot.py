@@ -11,6 +11,8 @@ Parity: reference algorithms/autoroot.py. Spark-first split of labor:
   split; here ALL (cluster, cuboid, element) scores come from ONE
   explode + shuffle (_search_all_clusters — the riskloc _layer_scores
   pattern), and only the per-(cluster, cuboid) winners reach the driver.
+  The NPS terms are defined once, in functions.search_terms, for this
+  and the pandas path.
 """
 from __future__ import annotations
 
@@ -22,7 +24,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from riskloc_spark.functions.scores import add_deviation_score
+from riskloc_spark.functions.scores import NUMPY_OPS, SPARK_OPS, add_deviation_score
+from riskloc_spark.functions.search_terms import nps, nps_leaf_terms, relative_error
 from riskloc_spark.plans.cuboid import cuboids_of_layer
 
 
@@ -117,12 +120,7 @@ def _nps_terms(
     else:
         Ve = F.sum("real").over(w)
         Fe = F.sum("predict").over(w)
-    vhat = F.when(Fe != 0, F.col("predict") * Ve / Fe).otherwise(F.lit(0.0))
-    v = F.col("real")
-    a_term = F.when(v == 0, F.lit(0.0)).otherwise(F.abs(v - vhat) / v)
-    b_term = F.when(v == 0, F.lit(0.0)).otherwise(
-        F.abs(v - F.col("predict")) / v
-    )
+    a_term, b_term = nps_leaf_terms(SPARK_OPS, F.col("real"), F.col("predict"), Ve, Fe)
 
     def s(name):
         c = F.col(name)
@@ -188,13 +186,9 @@ def _search_all_clusters(
     )
 
     w = Window.partitionBy("cid", "elem")
-    Ve = F.sum("real").over(w)
-    Fe = F.sum("predict").over(w)
-    vhat = F.when(Fe != 0, F.col("predict") * Ve / Fe).otherwise(F.lit(0.0))
-    v = F.col("real")
-    a_term = F.when(v == 0, F.lit(0.0)).otherwise(F.abs(v - vhat) / v)
-    b_term = F.when(v == 0, F.lit(0.0)).otherwise(
-        F.abs(v - F.col("predict")) / v
+    a_term, b_term = nps_leaf_terms(
+        SPARK_OPS, F.col("real"), F.col("predict"),
+        F.sum("real").over(w), F.sum("predict").over(w),
     )
     agg = (
         ex.withColumn("__a", a_term)
@@ -213,14 +207,11 @@ def _search_all_clusters(
         )
     )
 
-    N, Bp_tot = totals["N"], totals["Bp_tot"]
-    a = F.col("Ap_e") / F.col("n_full")
-    b = F.col("Bp_e") / F.col("n_full")
-    n_rest = F.lit(N) - F.col("n_full")
-    c_t = F.when(n_rest > 0, (F.lit(Bp_tot) - F.col("Bp_e")) / n_rest).otherwise(
-        F.lit(0.0)
+    c = F.col
+    scored = agg.withColumn(
+        "NPS",
+        nps(SPARK_OPS, c("Ap_e"), c("Bp_e"), c("n_full"), totals["N"], totals["Bp_tot"]),
     )
-    scored = agg.withColumn("NPS", 1 - ((a + c_t) / (b + c_t)))
 
     # melt the per-cluster counts; z and the (x/z) filter vary by cluster
     z_expr = F.lit(None).cast("double")
@@ -321,10 +312,10 @@ def _search_cluster_driver(
     pdf, cluster_pdf, attributes: list[str], delta_threshold: float,
     z: int, totals: dict[str, float],
 ) -> dict[str, Any] | None:
-    """pandas mirror of search_cluster — same formulas, same tie order;
+    """Per-cluster cuboid search on pandas: the functions.search_terms
+    NPS formulas and the tie order of _search_all_clusters;
     parity-tested against the distributed path."""
     best: dict[str, Any] = {"avg": -1.0}
-    N, Bp_tot = totals["N"], totals["Bp_tot"]
     for layer in range(1, len(attributes) + 1):
         for cuboid in cuboids_of_layer(attributes, layer):
             if layer == len(attributes) and (1.0 / z) <= delta_threshold:
@@ -335,12 +326,10 @@ def _search_cluster_driver(
                 continue
 
             g = pdf.groupby(cuboid, sort=False)
-            Ve = g["real"].transform("sum")
-            Fe = g["predict"].transform("sum")
-            vhat = np.where(Fe != 0, pdf["predict"] * Ve / Fe, 0.0)
-            v = pdf["real"]
-            a_term = np.where(v == 0, 0.0, np.abs(v - vhat) / v)
-            b_term = np.where(v == 0, 0.0, np.abs(v - pdf["predict"]) / v)
+            a_term, b_term = nps_leaf_terms(
+                NUMPY_OPS, pdf["real"], pdf["predict"],
+                g["real"].transform("sum"), g["predict"].transform("sum"),
+            )
             t = pdf.assign(__a=a_term, __b=b_term)
             terms = t.groupby(cuboid, sort=False).agg(
                 n_full=("__a", "size"), Ap_e=("__a", "sum"), Bp_e=("__b", "sum")
@@ -349,12 +338,12 @@ def _search_cluster_driver(
             joined = joined[(joined["x"] / joined["n_full"]) > delta_threshold]
             if not len(joined):
                 continue
-            a = joined["Ap_e"] / joined["n_full"]
-            b = joined["Bp_e"] / joined["n_full"]
-            n_rest = N - joined["n_full"]
-            c = np.where(n_rest > 0, (Bp_tot - joined["Bp_e"]) / n_rest, 0.0)
             joined = joined.assign(
-                NPS=1 - (a + c) / (b + c), LF=joined["x"] / joined["n_full"]
+                NPS=nps(
+                    NUMPY_OPS, joined["Ap_e"], joined["Bp_e"], joined["n_full"],
+                    totals["N"], totals["Bp_tot"],
+                ),
+                LF=joined["x"] / joined["n_full"],
             )
             joined = joined.sort_index(kind="stable").sort_values(
                 "NPS", ascending=False, kind="stable"
@@ -381,8 +370,8 @@ def _autoroot_driver(
     cluster_ends: list[float] | None = None,
     kde_density_fn=None,
 ) -> list[dict[str, Any]]:
-    """Driver-side mirror of the full autoroot loop on a collected leaf
-    frame (attrs as string, real, predict, deviation)."""
+    """The full autoroot loop on a collected pandas leaf frame (attrs as
+    string, real, predict, deviation)."""
     relevant = pdf[pdf["deviation"].abs() > 0.2]
     if not len(relevant):
         return []
@@ -396,8 +385,7 @@ def _autoroot_driver(
         cl = np.where(relevant["deviation"] <= end, i, cl)
     relevant = relevant.assign(cluster=cl)
 
-    v = pdf["real"]
-    bp = np.where(v == 0, 0.0, np.abs(v - pdf["predict"]) / v)
+    bp = relative_error(NUMPY_OPS, pdf["real"], pdf["predict"])
     totals = {"N": float(len(pdf)), "Bp_tot": float(bp.sum())}
 
     cluster_root_causes = []
@@ -431,7 +419,8 @@ def autoroot(
     aggregated leaf frame is driver-sized (cheap limit-probe), the
     KDE-cluster + per-cluster cuboid search runs vectorized on pandas
     (the search launches dozens of tiny sequential jobs otherwise); both
-    paths share formulas and are parity-tested. ``driver_rows=None``
+    paths evaluate the single NPS definitions in functions.search_terms
+    and are parity-tested. ``driver_rows=None``
     forces the distributed path, where the KDE fits on bounded distinct
     (deviation, count) pairs (``max_kde_sample`` overrides the 200k
     bound; ``seed`` is kept for API compatibility — the path is now
@@ -524,9 +513,7 @@ def autoroot(
         totals_row = df.agg(
             F.count(F.lit(1)).alias("N"),
             F.sum(
-                F.when(F.col("real") == 0, F.lit(0.0)).otherwise(
-                    F.abs(F.col("real") - F.col("predict")) / F.col("real")
-                )
+                relative_error(SPARK_OPS, F.col("real"), F.col("predict"))
             ).alias("Bp_tot"),
         ).first()
         totals = {

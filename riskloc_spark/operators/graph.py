@@ -363,7 +363,6 @@ def pagerank(
     scale: int = 10**12,
     partitions: int | None = None,
     checkpoint_every: int = 1,
-    shuffle_partitions: int | None = None,
     weight_col: str | None = None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
@@ -414,19 +413,11 @@ def pagerank(
     the 57-node gate, where 3^5 subtree copies drown planning). K=1
     is the default: one materialization job per iteration, each edge
     join runs once. K=2 only wins on toy graphs where per-job
-    scheduling dominates real work — prefer ``shuffle_partitions``
-    for those.
+    scheduling dominates real work.
 
-    ``shuffle_partitions``: when set, the session's shuffle width is
-    pinned to this value for the duration of the run (and restored):
-    the per-iteration frames are node-sized, far smaller than the
-    input edge volume, and eager checkpoints pin their partitioning
-    BEFORE AQE can coalesce — a 57-node toy graph at the session's 32
-    partitions spends its whole wall on empty-task scheduling (6.3s
-    -> 4.3s measured at width 4). Size it to the HOST count: ~200
-    bytes/node, so 100M hosts ≈ 20 GB ≈ 256-512 partitions, still
-    tiny next to the edge scan that feeds ``host_graph``."""
-    spark = edges.sparkSession
+    ``partitions``: when set, the edge set is repartitioned by source
+    to this width. The session conf is never written, so concurrent
+    queries on the same session are unaffected."""
     e = (
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -445,11 +436,6 @@ def pagerank(
     )
     if partitions:
         e = e.repartition(partitions, "src")
-    prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
     cached: list = []
     try:
         e = e.persist()
@@ -555,12 +541,10 @@ def pagerank(
                 scores = scores.localCheckpoint(eager=True)
         return scores
     finally:
-        # unpersist in the SAME finally as the width restore: an
-        # exception mid-iteration must not leak five cached frames for
-        # the session lifetime (r11 advisory)
+        # an exception mid-iteration must not leak five cached frames
+        # for the session lifetime (r11 advisory)
         for frame in cached:
             frame.unpersist()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_width)
 
 
 def pagerank_sql(

@@ -22,12 +22,22 @@ from pyspark.sql import functions as F
 from riskloc_spark.data import local_rows_df
 
 from riskloc_spark.functions.scores import (
+    NUMPY_OPS,
+    SPARK_OPS,
     add_deviation_score,
     add_explanatory_power,
     add_partition,
     add_weight,
+    deviation,
+    explanatory_power,
     get_cutoff,
+    measures,
+    partition,
+    pick_cutoff,
+    relative_n_remove,
+    weight,
 )
+from riskloc_spark.functions.search_terms import rescaled_abs_deviation, risk_scores
 from riskloc_spark.plans.cuboid import cuboids_of_layer, elem_expr
 
 
@@ -98,15 +108,13 @@ def _layer_scores(
             return F.sum(term.cast(_DEC)).over(w).cast("double")
         return F.sum(term).over(w)
 
-    # low-risk needs a = predict * R/P with R,P sums over the element's
-    # valid rows (ref riskloc.py:57-72); window gives them per-row.
+    # low-risk needs R,P sums over the element's valid rows (ref
+    # riskloc.py:57-72); the window gives them per-row.
     R = _wsum(F.when(valid, F.col("real")))
     P = _wsum(F.when(valid, F.col("predict")))
-    a = F.col("predict") * R / P
-    denom = a + F.col("real")
-    d = F.when(denom == 0, F.lit(0.0)).otherwise(2.0 * (a - F.col("real")) / denom)
+    absd = rescaled_abs_deviation(SPARK_OPS, F.col("real"), F.col("predict"), R, P)
 
-    ex = ex.withColumn("__absd", F.when(valid, F.abs(d))).withColumn(
+    ex = ex.withColumn("__absd", F.when(valid, absd)).withColumn(
         "__absdev", F.when(valid, F.abs(F.col("deviation")))
     )
 
@@ -136,13 +144,9 @@ def _layer_scores(
         _avg("__absdev").alias("w2"),
     )
 
-    high = F.col("n_anom") / (F.col("n_anom") + F.col("n_norm") + 1.0)
-    low = F.when(
-        F.col("w2").isNull() | (F.col("w2") == 0) | F.col("w1").isNull(), F.lit(0.0)
-    ).otherwise(F.col("w1") / F.col("w2"))
-    return agg.withColumn("high", high).withColumn("low", low).withColumn(
-        "risk", F.col("high") - F.col("low")
-    )
+    c = F.col
+    high, low, risk = risk_scores(SPARK_OPS, c("n_anom"), c("n_norm"), c("w1"), c("w2"))
+    return agg.withColumns({"high": high, "low": low, "risk": risk})
 
 
 def search_anomaly(
@@ -285,24 +289,10 @@ def search_anomaly(
     return None, pruned, ep_sum
 
 
-def _driver_cutoff(dev, n_remove: int, relative: bool) -> float:
-    """Local mirror of functions.scores.get_cutoff (ref riskloc.py:35-47)."""
-    import math
-
-    import numpy as np
-
-    devs = np.unique(dev)  # sorted ascending
-    if relative:
-        n_remove = int(math.ceil(len(devs) * n_remove / 100))
-    lo = devs[: n_remove + 1].max()  # (n_remove+1)-th smallest (or max avail)
-    hi = devs[-(n_remove + 1):].min()  # (n_remove+1)-th largest
-    return -min(lo, hi, key=abs)
-
-
 def _driver_search(pdf, attributes, pruned, risk_threshold, adj_ep_threshold):
-    """Local mirror of search_anomaly on a pandas frame: same layer order,
-    same per-cuboid strict-EP scan, same prune bookkeeping."""
-    import numpy as np
+    """search_anomaly on a pandas frame: same layer order, same
+    per-cuboid strict-EP scan, same prune bookkeeping, and the same
+    functions.search_terms risk formulas."""
     import pandas as pd
 
     for layer in range(1, len(attributes) + 1):
@@ -335,11 +325,8 @@ def _driver_search(pdf, attributes, pruned, risk_threshold, adj_ep_threshold):
             g = t.groupby(keys, sort=False, dropna=False)
             R = g["rv"].transform("sum")
             P = g["pv"].transform("sum")
-            a = t["predict"] * R / P
-            denom = a + t["real"]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                d = np.where(denom == 0, 0.0, 2.0 * (a - t["real"]) / denom)
-            t["absd"] = pd.Series(np.abs(d), index=t.index).where(valid)
+            absd = rescaled_abs_deviation(NUMPY_OPS, t["real"], t["predict"], R, P)
+            t["absd"] = pd.Series(absd, index=t.index).where(valid)
             agg = t.groupby(keys, sort=False, dropna=False).agg(
                 n_anom=("anom_w", "sum"),
                 n_norm=("norm_w", "sum"),
@@ -349,15 +336,9 @@ def _driver_search(pdf, attributes, pruned, risk_threshold, adj_ep_threshold):
                 w1=("absd", "mean"),
                 w2=("absdev", "mean"),
             )
-            high = agg["n_anom"] / (agg["n_anom"] + agg["n_norm"] + 1.0)
-            low = np.where(
-                agg["w2"].isna() | (agg["w2"] == 0) | agg["w1"].isna(),
-                0.0,
-                agg["w1"] / agg["w2"],
+            agg["high"], agg["low"], agg["risk"] = risk_scores(
+                NUMPY_OPS, agg["n_anom"], agg["n_norm"], agg["w1"], agg["w2"]
             )
-            agg["high"] = high
-            agg["low"] = low
-            agg["risk"] = agg["high"] - agg["low"]
 
             if pruned is not None and layer <= 1:
                 for el in agg.index[
@@ -405,42 +386,24 @@ def _riskloc_driver(
     deviation are computed here — in the distributed plan the EP global
     sums are a broadcast subquery that recomputes the leaf frame inside
     the same action, so collecting raw and scoring locally saves a full
-    extra pass. Mirrors the distributed formulas exactly — tests assert
-    both paths give identical causes."""
-    import math
-
+    extra pass. The scores come from the same functions.scores formulas
+    as the distributed path — tests assert both paths give identical
+    causes."""
     import numpy as np
 
-    # deviation (scores.add_deviation_score) — row-local
-    denom = pdf["predict"] + pdf["real"]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        dev = np.where(denom == 0, 0.0, 2.0 * (pdf["predict"] - pdf["real"]) / denom)
-    pdf = pdf.assign(deviation=dev)
-
-    # ep (scores.add_explanatory_power) — global sums over this frame
+    dev = deviation(NUMPY_OPS, pdf["real"], pdf["predict"])
+    totals = {m: pdf[m].sum() for m in measures(derived)}
+    ep = explanatory_power(pdf.__getitem__, totals.__getitem__, derived)
     if derived:
-        Fa, Fb = pdf["predict_a"].sum(), pdf["predict_b"].sum()
-        n = (pdf["real_a"] - pdf["predict_a"]) * Fb - (
-            pdf["real_b"] - pdf["predict_b"]
-        ) * Fa
-        d = Fb * (Fb + pdf["real_b"] - pdf["predict_b"])
-        ep = n / d
-        pdf = pdf.assign(ep=ep / ep.sum())
-    else:
-        A, Ftot = pdf["real"].sum(), pdf["predict"].sum()
-        pdf = pdf.assign(ep=(pdf["real"] - pdf["predict"]) / (A - Ftot))
+        ep = ep / ep.sum()
 
-    cutoff = _driver_cutoff(pdf["deviation"].to_numpy(), n_remove, remove_relative)
-    anomaly_right = math.copysign(1, cutoff) > 0 if cutoff == 0 else cutoff >= 0
-    if anomaly_right:
-        part = (pdf["deviation"] > cutoff).astype("int64")
-    else:
-        part = (pdf["deviation"] < cutoff).astype("int64")
-    w = (cutoff - pdf["deviation"]).abs()
-    w = w.where(~((pdf["real"] == 0) & (pdf["predict"] == 0)), 0.0)
-    w = pdf["deviation"].abs().where(part == 1, w)
-    w = w.clip(upper=1.0)
-    pdf = pdf.assign(partition=part, weight=w)
+    devs = np.unique(dev)  # sorted ascending
+    if remove_relative:
+        n_remove = relative_n_remove(n_remove, len(devs))
+    cutoff = pick_cutoff(devs[: n_remove + 1], devs[-(n_remove + 1):])
+    part = partition(NUMPY_OPS, dev, cutoff)
+    w = weight(NUMPY_OPS, dev, pdf["real"], pdf["predict"], part, cutoff)
+    pdf = pdf.assign(deviation=dev, ep=ep, partition=part, weight=w)
 
     anomaly_ep_sum = float(pdf.loc[pdf["partition"] == 1, "ep"].sum())
     if anomaly_ep_sum < 0:
@@ -491,22 +454,21 @@ def riskloc(
     runs vectorized on pandas — the 20-odd tiny sequential Spark jobs an
     iterative search launches would otherwise dominate wall time. Huge
     leaf frames (high-cardinality dims) take the fully distributed
-    explode-per-layer path. Both paths share formulas and are
-    parity-tested against each other; set ``driver_rows=None`` to force
-    the distributed path."""
+    explode-per-layer path. Both paths evaluate the single definitions
+    in functions.scores and functions.search_terms and are parity-tested
+    against each other; set ``driver_rows=None`` to force the
+    distributed path."""
     if driver_rows is not None:
         # probe and collect the RAW frame in ONE action:
         # limit(k+1).toPandas() stops scanning once k+1 rows exist;
         # len(pdf) > k means "too big". EP/deviation are computed locally
         # — in the distributed plan the EP global sums are a broadcast
         # subquery that recomputes the leaf frame within the same action.
-        measures = ["real", "predict"] + (
-            ["real_a", "real_b", "predict_a", "predict_b"] if derived else []
-        )
+        cols = ("real", "predict") + (measures(True) if derived else ())
         sel = df.select(
             *[F.coalesce(F.col(a).cast("string"), F.lit("None")).alias(a)
               for a in attributes],
-            *[F.col(m).cast("double").alias(m) for m in measures],
+            *[F.col(m).cast("double").alias(m) for m in cols],
         )
         pdf = sel.limit(driver_rows + 1).toPandas()
         if len(pdf) <= driver_rows:

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from riskloc_spark.functions import scores
+
 # Static events schema (TESTDATA.md layout): the fallback when the
 # stream directory is empty at start — a standard structured-streaming
 # startup state where the batch probe below cannot infer a schema.
@@ -129,13 +131,11 @@ def windowed_kpi_stream(
     )
     joined = agg.join(F.broadcast(baseline), on="event_type", how="left")
     predict = F.col("n_events") * F.coalesce(F.col("mean_value"), F.lit(0.0))
-    denom = predict + F.col("real")
-    deviation = F.when(denom == 0, F.lit(0.0)).otherwise(
-        2.0 * (predict - F.col("real")) / denom
-    )
     return (
         joined.withColumn("predict", predict)
-        .withColumn("deviation", deviation)
+        .withColumn(
+            "deviation", scores.deviation(scores.SPARK_OPS, F.col("real"), predict)
+        )
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),

@@ -4,7 +4,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from riskloc_spark.operators.adtributor import adtributor, rev_adtributor, rev_rec_adtributor
+from riskloc_spark.operators.adtributor import adtributor, rev_rec_adtributor
 
 
 def pandas_adtributor(pdf, dims, teep=0.1, tep=0.1, k=3):

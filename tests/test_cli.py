@@ -1,8 +1,10 @@
 """CLI end-to-end: the reference run.py workflow — load case, localize,
 score F1 against the label."""
 import json
+import os
 import subprocess
 import sys
+import time
 
 import numpy as np
 import pandas as pd
@@ -17,24 +19,31 @@ def run_cli_parallel(cmds, timeout=300):
     these tests were the suite's largest wall-time block (and the suite
     timed out in the r15 driver harness, VERIFY_r15 tests_ok=false).
     Only invocations with no data dependency between them are batched;
-    dependent steps stay in later waves.  Returns CompletedProcess-like
-    results in cmd order."""
-    procs = [
-        subprocess.Popen(
-            cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True
-        )
-        for cmd in cmds
-    ]
+    dependent steps stay in later waves.  At most ``os.cpu_count()``
+    run at once, and all of them share ONE wall-clock deadline of
+    ``timeout`` seconds (a process still running then is killed).
+    Returns CompletedProcess-like results in cmd order."""
+    deadline = time.monotonic() + timeout
+    width = max(1, os.cpu_count() or 1)
     results = []
-    for p in procs:
-        try:
-            out, err = p.communicate(timeout=timeout)
-        except subprocess.TimeoutExpired:
-            p.kill()
-            out, err = p.communicate()
-        results.append(
-            subprocess.CompletedProcess(p.args, p.returncode, out, err)
-        )
+    for start in range(0, len(cmds), width):
+        procs = [
+            subprocess.Popen(
+                cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True
+            )
+            for cmd in cmds[start:start + width]
+        ]
+        for p in procs:
+            try:
+                out, err = p.communicate(
+                    timeout=max(0.0, deadline - time.monotonic())
+                )
+            except subprocess.TimeoutExpired:
+                p.kill()
+                out, err = p.communicate()
+            results.append(
+                subprocess.CompletedProcess(p.args, p.returncode, out, err)
+            )
     return results
 
 

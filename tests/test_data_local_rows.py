@@ -61,3 +61,20 @@ def test_load_table_schema_cache_contract(spark):
     e2 = D.load_table(spark, sf, "events")
     t1, t2 = dict(e1.dtypes)["ts"], dict(e2.dtypes)["ts"]
     assert t1 == t2 and t1.startswith("timestamp")
+
+
+def test_load_table_schema_cache_sees_rewrite(spark, tmp_path):
+    """A table rewritten in place with a different schema is re-inferred:
+    a cache entry only holds while the path's file fingerprint (listing,
+    mtime, size) is unchanged."""
+    import pandas as pd
+
+    from riskloc_spark.data import load_table
+
+    sf = str(tmp_path)
+    pd.DataFrame({"a": [1, 2]}).to_parquet(tmp_path / "t.parquet")
+    assert load_table(spark, sf, "t").columns == ["a"]
+    pd.DataFrame({"b": ["x"], "c": [0.5]}).to_parquet(tmp_path / "t.parquet")
+    df = load_table(spark, sf, "t")
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 0.5)]

@@ -124,6 +124,25 @@ def test_pagerank_partitioning_invariant(spark):
     assert a == b
 
 
+def test_pagerank_never_writes_session_conf(spark, monkeypatch):
+    """pagerank must not touch session-global conf: a concurrent query on
+    the same session would compile with the changed value."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("a", "d")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+
+    def refuse(self, key, value):
+        raise AssertionError(f"pagerank set session conf {key}={value}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    got = {
+        r["node"]: r["score"]
+        for r in pagerank(df, "src", "dst", partitions=3).collect()
+    }
+    assert got == _pagerank_py(edges)
+
+
 def test_pagerank_self_loops_and_duplicate_edges_ignored(spark):
     df = spark.createDataFrame(
         [("a", "b"), ("a", "b"), ("a", "a"), ("b", "a")],
