@@ -4914,8 +4914,9 @@ def riskloc_first_cause_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference scan order are all deterministic (no rng), so DuckDB
     replays the complete first search pass in SQL
     (_riskloc_first_cause_sql). Iterations beyond the first only add
-    found-cause row removal (riskloc.py:565-574) and stay covered by
-    the rows-only riskloc_rca + planted-cause + dual-path parity."""
+    found-cause row removal (the iteration loop of riskloc()) and stay
+    covered by the rows-only riskloc_rca + planted-cause + dual-path
+    parity."""
     from riskloc_spark.operators.riskloc import riskloc
 
     df = rca_events(spark, sf_dir)
@@ -8405,11 +8406,11 @@ def _squeeze_search_sql(derived: bool = False, variant: str = "hist") -> str:
 def _riskloc_prepared_ctes(derived: bool = False) -> str:
     """Shared CTE chain building riskloc's fully prepared leaf frame in
     SQL: ep (global sums; derived mode uses the a/b-split EP normalized
-    by its own sum, _riskloc_driver:419-426), deviation, cutoff
+    by its own sum, as in _riskloc_driver), deviation, cutoff
     (n_remove=5 distinct deviations), partition, weight, anomaly-ep
-    sign flip (ep2), ep_z — mirror of operators/riskloc.py:523-538 /
-    _riskloc_driver:412-448. Used by the riskloc_layer_scores and
-    riskloc_first_cause[_derived] oracles."""
+    sign flip (ep2), ep_z — mirror of the scoring prelude of riskloc()
+    and _riskloc_driver in operators/riskloc.py. Used by the
+    riskloc_layer_scores and riskloc_first_cause[_derived] oracles."""
     if derived:
         scored = f"""rcad AS ({RCA_EVENTS_DERIVED_SQL}),
         tot AS (SELECT SUM(predict_a) AS Fa, SUM(predict_b) AS Fb FROM rcad),
@@ -8587,7 +8588,7 @@ def _riskloc_two_pass_sql(derived: bool = False) -> str:
     """DuckDB twin of riskloc_two_pass_q (riskloc, max_iterations=2):
     pass 1 = the first-cause search; the winner's leaf rows are removed
     from the prepared frame by matching the winning cuboid's label
-    conjunction (ref riskloc.py:565-574 — found causes become an
+    conjunction (the iteration loop of riskloc() — found causes become an
     exclusion predicate over the SAME prepared columns, nothing is
     recomputed); pass 2 re-runs the search over the residual with the
     ACCUMULATED prune state, gated on the iteration stop-check

@@ -6,8 +6,9 @@ Each term is written once, as plain arithmetic over its operands, and
 serves both the distributed and the driver-side pandas search: operands
 are Spark Columns or pandas Series, and ``ops`` is
 ``scores.SPARK_OPS`` or ``scores.NUMPY_OPS`` (see functions/scores.py).
-A per-element sum arrives as a window Column on Spark and as a group
-``transform`` on pandas; a global total as a float.
+A per-element sum arrives as a window Column on Spark and, on the
+driver, as an ``np.bincount`` gathered back to the leaves (riskloc) or
+a group ``transform`` (autoroot); a global total as a float.
 """
 from __future__ import annotations
 

@@ -9,13 +9,18 @@ Parity target: reference algorithms/riskloc.py:167-215 (search loop
   sums come from a window partitioned by the cuboid keys (same hash
   partitioning as the groupBy, so one shuffle total), and the element
   chosen is the max-EP row with risk >= threshold.
-* The layer/iteration orchestration stays on the driver, but driver
-  state is only O(#root-causes + #pruned-values) — never leaf data.
+* The layer/iteration orchestration stays on the driver, with state of
+  O(#root-causes + #pruned-values) — unless the leaf frame is
+  driver-sized and collected whole (``_riskloc_driver``).
 """
 from __future__ import annotations
 
+import logging
+from functools import reduce
+from operator import and_, or_
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -38,12 +43,11 @@ from riskloc_spark.functions.scores import (
     weight,
 )
 from riskloc_spark.functions.search_terms import rescaled_abs_deviation, risk_scores
-from riskloc_spark.plans.cuboid import cuboids_of_layer, elem_expr
+from riskloc_spark.plans.cuboid import (
+    CuboidElements, cuboids_of_layer, elem_expr, factorize_attributes,
+)
 
-
-def _scalar(df: DataFrame, col) -> float:
-    v = df.agg(col.alias("v")).first()["v"]
-    return 0.0 if v is None else float(v)
+_log = logging.getLogger(__name__)
 
 
 _SEP = "\x1f"
@@ -289,108 +293,87 @@ def search_anomaly(
     return None, pruned, ep_sum
 
 
-def _driver_search(pdf, attributes, pruned, risk_threshold, adj_ep_threshold):
-    """search_anomaly on a pandas frame: same layer order, same
-    per-cuboid strict-EP scan, same prune bookkeeping, and the same
-    functions.search_terms risk formulas."""
-    import pandas as pd
+def _leaf_terms(real, predict, dev, ep, part, w) -> dict[str, Any]:
+    """Per-leaf arrays of the driver search. Summed terms read NaN as 0,
+    as pandas' skipna sums do; w2 is |deviation| on valid leaves, else NaN."""
+    real, predict, dev, ep = (np.asarray(x, dtype=float) for x in (real, predict, dev, ep))
+    valid = (real != 0) & (predict != 0)
+    sums = dict(
+        n_anom=np.where(part == 1, w, 0.0), n_norm=np.where(part == 0, w, 0.0),
+        ep=ep, ep_z=np.clip(ep, 0.0, None), part_sum=part,
+        R=np.where(valid, real, 0.0), P=np.where(valid, predict, 0.0),
+    )
+    leaf = {k: np.where(np.isnan(v), 0.0, v) for k, v in sums.items()}
+    return {**leaf, "real": real, "predict": predict, "valid": valid,
+            "w2": np.where(valid, np.abs(dev), np.nan)}
 
-    for layer in range(1, len(attributes) + 1):
-        best: dict[str, Any] = {"ep_score": adj_ep_threshold}
-        for cuboid in cuboids_of_layer(attributes, layer):
-            sub = pdf
-            if pruned:
-                for dim in cuboid:
-                    values = pruned.get((dim,))
-                    if values:
-                        sub = sub[~sub[dim].isin(values)]
-            if not len(sub):
-                continue
-            valid = (sub["real"] != 0) & (sub["predict"] != 0)
-            t = pd.DataFrame(
-                {
-                    "rv": sub["real"].where(valid),
-                    "pv": sub["predict"].where(valid),
-                    "absdev": sub["deviation"].abs().where(valid),
-                    "anom_w": sub["weight"].where(sub["partition"] == 1, 0.0),
-                    "norm_w": sub["weight"].where(sub["partition"] == 0, 0.0),
-                    "ep": sub["ep"],
-                    "ep_z": sub["ep_z"],
-                    "part": sub["partition"],
-                    "real": sub["real"],
-                    "predict": sub["predict"],
-                }
-            )
-            keys = [sub[d] for d in cuboid]
-            g = t.groupby(keys, sort=False, dropna=False)
-            R = g["rv"].transform("sum")
-            P = g["pv"].transform("sum")
-            absd = rescaled_abs_deviation(NUMPY_OPS, t["real"], t["predict"], R, P)
-            t["absd"] = pd.Series(absd, index=t.index).where(valid)
-            agg = t.groupby(keys, sort=False, dropna=False).agg(
-                n_anom=("anom_w", "sum"),
-                n_norm=("norm_w", "sum"),
-                ep=("ep", "sum"),
-                ep_z=("ep_z", "sum"),
-                part_sum=("part", "sum"),
-                w1=("absd", "mean"),
-                w2=("absdev", "mean"),
-            )
-            agg["high"], agg["low"], agg["risk"] = risk_scores(
-                NUMPY_OPS, agg["n_anom"], agg["n_norm"], agg["w1"], agg["w2"]
-            )
 
-            if pruned is not None and layer <= 1:
-                for el in agg.index[
-                    (agg["ep_z"] < adj_ep_threshold) | (agg["part_sum"] == 0)
-                ]:
-                    pruned.setdefault(tuple(cuboid), []).append(el)
+def _element_scores(leaf: dict[str, Any], g: CuboidElements) -> dict[str, Any]:
+    """Per-element riskloc statistics and risk scores of one cuboid, from
+    the functions.search_terms formulas _layer_scores uses."""
+    t = {k: v[g.rows] for k, v in leaf.items()}
+    s = {k: g.sum(t[k]) for k in ("n_anom", "n_norm", "ep", "ep_z", "part_sum")}
+    with np.errstate(invalid="ignore", divide="ignore"):
+        R, P = g.sum(t["R"])[g.inv], g.sum(t["P"])[g.inv]
+        absd = rescaled_abs_deviation(NUMPY_OPS, t["real"], t["predict"], R, P)
+    s["w1"] = g.mean(np.where(t["valid"], absd, np.nan))
+    s["w2"] = g.mean(t["w2"])
+    s["high"], s["low"], s["risk"] = risk_scores(
+        NUMPY_OPS, s["n_anom"], s["n_norm"], s["w1"], s["w2"]
+    )
+    return s
 
-            cand = agg[
-                (agg["part_sum"] > 0)
-                & (agg["ep"] > adj_ep_threshold)
-                & (agg["risk"] >= risk_threshold)
-            ]
-            if not len(cand):
-                continue
-            top = cand.loc[cand["ep"].idxmax()]
-            if top["ep"] > best["ep_score"]:
-                el = top.name if layer > 1 else (top.name,)
-                best = {
-                    "elements": [tuple(str(v) for v in el)],
-                    "high risk score": float(top["high"]),
-                    "low risk score": float(top["low"]),
-                    "risk score": float(top["risk"]),
-                    "ep_score": float(top["ep"]),
-                    "layer": layer,
-                    "cuboid": list(cuboid),
-                }
-        if "elements" in best:
-            return best
+
+def _driver_search(leaf, enc, active, pruned, risk_threshold, adj_ep_threshold):
+    """search_anomaly over the ``active`` leaves of a collected frame: same
+    layer order, per-cuboid strict-EP scan and prune bookkeeping (``pruned``
+    updated in place, applied as masks over each dim's uniques). Returns
+    (cause, row of one of its leaves) or None."""
+    for layer in range(1, len(enc) + 1):
+        best = None
+        for cuboid in cuboids_of_layer(list(enc), layer):
+            sel = active
+            for dim in cuboid if pruned else ():
+                codes, uniques = enc[dim]
+                sel = sel & ~np.isin(uniques, pruned.get((dim,), []))[codes]
+            g = CuboidElements(enc, cuboid, sel)
+            s = _element_scores(leaf, g)
+            if pruned is not None and layer == 1:
+                (dim,) = cuboid
+                codes = enc[dim][0][g.first[(s["ep_z"] < adj_ep_threshold) | (s["part_sum"] == 0)]]
+                pruned.setdefault((dim,), []).extend(enc[dim][1][codes])
+            cand = np.flatnonzero(
+                (s["part_sum"] > 0) & (s["ep"] > adj_ep_threshold) & (s["risk"] >= risk_threshold)
+            )
+            if len(cand):
+                top = cand[np.argmax(s["ep"][cand])]  # first max, as idxmax
+                if best is None or s["ep"][top] > best[0]:  # strict, as the reference
+                    best = (s["ep"][top], s, top, g.first[top], cuboid)
+        if best is not None:
+            _, s, top, row, cuboid = best
+            return {
+                "elements": [tuple(str(enc[d][1][enc[d][0][row]]) for d in cuboid)],
+                "high risk score": float(s["high"][top]),
+                "low risk score": float(s["low"][top]),
+                "risk score": float(s["risk"][top]),
+                "ep_score": float(s["ep"][top]),
+                "layer": layer,
+                "cuboid": list(cuboid),
+            }, row
     return None
 
 
 def _riskloc_driver(
-    pdf,
-    attributes: list[str],
-    risk_threshold: float,
-    pep_threshold: float,
-    n_remove: int,
-    remove_relative: bool,
-    prune_elements: bool,
-    max_iterations: int,
-    derived: bool,
+    pdf, attributes: list[str], risk_threshold: float, pep_threshold: float, n_remove: int,
+    remove_relative: bool, prune_elements: bool, max_iterations: int, derived: bool,
 ) -> list[dict[str, Any]]:
     """Driver-side search over a collected RAW leaf frame (attrs as
     string, real, predict [+ a/b measures when derived]). EP and
     deviation are computed here — in the distributed plan the EP global
     sums are a broadcast subquery that recomputes the leaf frame inside
     the same action, so collecting raw and scoring locally saves a full
-    extra pass. The scores come from the same functions.scores formulas
-    as the distributed path — tests assert both paths give identical
-    causes."""
-    import numpy as np
-
+    extra pass. The scores come from the functions.scores formulas of the
+    distributed path, and the search groups with plans.cuboid's kernel."""
     dev = deviation(NUMPY_OPS, pdf["real"], pdf["predict"])
     totals = {m: pdf[m].sum() for m in measures(derived)}
     ep = explanatory_power(pdf.__getitem__, totals.__getitem__, derived)
@@ -403,31 +386,28 @@ def _riskloc_driver(
     cutoff = pick_cutoff(devs[: n_remove + 1], devs[-(n_remove + 1):])
     part = partition(NUMPY_OPS, dev, cutoff)
     w = weight(NUMPY_OPS, dev, pdf["real"], pdf["predict"], part, cutoff)
-    pdf = pdf.assign(deviation=dev, ep=ep, partition=part, weight=w)
 
-    anomaly_ep_sum = float(pdf.loc[pdf["partition"] == 1, "ep"].sum())
-    if anomaly_ep_sum < 0:
-        pdf = pdf.assign(ep=-pdf["ep"])
-        anomaly_ep_sum = -anomaly_ep_sum
-    adj_ep_threshold = anomaly_ep_sum * pep_threshold
-    pdf = pdf.assign(ep_z=pdf["ep"].clip(lower=0.0))
+    ep, anom = np.asarray(ep, dtype=float), part == 1
+    if np.nansum(ep[anom]) < 0:
+        ep = -ep
+    adj_ep_threshold = float(np.nansum(ep[anom])) * pep_threshold
+    leaf = _leaf_terms(pdf["real"], pdf["predict"], dev, ep, part, w)
 
+    enc = factorize_attributes(pdf, attributes)
     root_causes: list[dict[str, Any]] = []
     pruned: dict | None = {} if prune_elements else None
-    mask = np.ones(len(pdf), dtype=bool)
+    active = np.ones(len(pdf), dtype=bool)
     for _ in range(max_iterations):
-        cur = pdf[mask]
-        ep_sum = float(cur.loc[cur["partition"] == 1, "ep"].sum())
-        if ep_sum < adj_ep_threshold:
+        if float(leaf["ep"][active & anom].sum()) < adj_ep_threshold:
             break
-        rc = _driver_search(cur, attributes, pruned, risk_threshold, adj_ep_threshold)
-        if rc is None:
+        found = _driver_search(leaf, enc, active, pruned, risk_threshold, adj_ep_threshold)
+        if found is None:
             break
+        rc, row = found
         root_causes.append(rc)
-        m = np.ones(len(pdf), dtype=bool)
-        for dim, val in zip(rc["cuboid"], rc["elements"][0]):
-            m &= (pdf[dim] == val).to_numpy()
-        mask &= ~m
+        active = active & ~np.logical_and.reduce(
+            [enc[d][0] == enc[d][0][row] for d in rc["cuboid"]]
+        )
     return root_causes
 
 
@@ -446,24 +426,14 @@ def riskloc(
     """Full RiskLoc (ref riskloc.py:167-215). Returns reference-shaped
     root-cause dicts.
 
-    The leaf frame is built and scored distributed (global sums, EP,
-    deviation). The iterative layer search is adaptive, like AQE picking a
-    physical strategy from runtime stats: when the *aggregated* leaf frame
-    is driver-sized (<= ``driver_rows``, probed with a cheap
-    ``limit(k+1).count()`` that never scans past k+1 rows), the search
-    runs vectorized on pandas — the 20-odd tiny sequential Spark jobs an
-    iterative search launches would otherwise dominate wall time. Huge
-    leaf frames (high-cardinality dims) take the fully distributed
-    explode-per-layer path. Both paths evaluate the single definitions
-    in functions.scores and functions.search_terms and are parity-tested
-    against each other; set ``driver_rows=None`` to force the
-    distributed path."""
+    The path adapts to the data, as AQE does: ``limit(k+1).toPandas()``
+    (k = ``driver_rows``) probes the leaf frame and, at <= k rows, is the
+    collect itself; the frame is then scored and searched on the driver,
+    sparing the distributed search's 20-odd tiny sequential Spark jobs.
+    Both paths use the single definitions in functions.scores and
+    functions.search_terms and are parity-tested; ``driver_rows=None``
+    forces the distributed path. The path taken and why log at DEBUG."""
     if driver_rows is not None:
-        # probe and collect the RAW frame in ONE action:
-        # limit(k+1).toPandas() stops scanning once k+1 rows exist;
-        # len(pdf) > k means "too big". EP/deviation are computed locally
-        # — in the distributed plan the EP global sums are a broadcast
-        # subquery that recomputes the leaf frame within the same action.
         cols = ("real", "predict") + (measures(True) if derived else ())
         sel = df.select(
             *[F.coalesce(F.col(a).cast("string"), F.lit("None")).alias(a)
@@ -472,17 +442,11 @@ def riskloc(
         )
         pdf = sel.limit(driver_rows + 1).toPandas()
         if len(pdf) <= driver_rows:
-            return _riskloc_driver(
-                pdf,
-                attributes,
-                risk_threshold,
-                pep_threshold,
-                n_remove,
-                remove_relative,
-                prune_elements,
-                max_iterations,
-                derived,
-            )
+            _log.debug("riskloc: driver path, %d leaves <= driver_rows=%d", len(pdf), driver_rows)
+            return _riskloc_driver(pdf, attributes, risk_threshold, pep_threshold, n_remove,
+                                   remove_relative, prune_elements, max_iterations, derived)
+    _log.debug("riskloc: distributed path, %s", "forced by driver_rows=None" if driver_rows is None
+               else f"more than driver_rows={driver_rows} leaves")
 
     df = add_explanatory_power(df, derived)
     df = add_deviation_score(df)
@@ -491,9 +455,7 @@ def riskloc(
     df = add_partition(df, cutoff)
     df = add_weight(df, cutoff)
 
-    anomaly_ep_sum = _scalar(
-        df.filter(F.col("partition") == 1), F.sum("ep")
-    )
+    anomaly_ep_sum = df.filter(F.col("partition") == 1).agg(F.sum("ep")).first()[0] or 0.0
     if anomaly_ep_sum < 0:
         df = df.withColumn("ep", -F.col("ep"))
         anomaly_ep_sum = -anomaly_ep_sum
@@ -507,36 +469,30 @@ def riskloc(
     root_causes: list[dict[str, Any]] = []
     pruned: dict | None = {} if prune_elements else None
     current = base
-    for it in range(max_iterations):
-        # iteration 0 reuses the ep-sum computed above (the adj-threshold
-        # scalar); later iterations fuse the stop-check into the layer-1
-        # search job (one action per iteration total)
-        if it == 0 and anomaly_ep_sum < adj_ep_threshold:
-            break
+    try:
+        for it in range(max_iterations):
+            # iteration 0 reuses the ep-sum computed above (the adj-threshold
+            # scalar); later iterations fuse the stop-check into the layer-1
+            # search job (one action per iteration total)
+            if it == 0 and anomaly_ep_sum < adj_ep_threshold:
+                break
 
-        root_cause, pruned, _ = search_anomaly(
-            current,
-            attributes,
-            pruned,
-            risk_threshold,
-            adj_ep_threshold,
-            need_ep_sum=(it > 0),
-        )
-        if root_cause is None:
-            break
-        root_causes.append(root_cause)
+            root_cause, pruned, _ = search_anomaly(
+                current, attributes, pruned, risk_threshold, adj_ep_threshold,
+                need_ep_sum=(it > 0),
+            )
+            if root_cause is None:
+                break
+            root_causes.append(root_cause)
 
-        cond = None
-        for rc in root_causes:
-            c = None
-            for dim, val in zip(rc["cuboid"], rc["elements"][0]):
-                eq = F.coalesce(
-                    F.col(dim).cast("string"), F.lit("None")
-                ) == F.lit(val)
-                c = eq if c is None else (c & eq)
-            cond = c if cond is None else (cond | c)
-        current = base.filter(~cond)
-    base.unpersist()
+            cond = reduce(or_, [
+                reduce(and_, [F.coalesce(F.col(dim).cast("string"), F.lit("None")) == F.lit(val)
+                              for dim, val in zip(rc["cuboid"], rc["elements"][0])])
+                for rc in root_causes
+            ])
+            current = base.filter(~cond)
+    finally:
+        base.unpersist()
     return root_causes
 
 

@@ -11,11 +11,16 @@ gps / ps scores of a *set* of elements are exact functions of per-element
 sums, because the ripple ratio V_e/F_e is per-element. So MCTS can run on
 the driver over this compact stats frame — no leaf data leaves the
 executors.
+
+Driver-side searches over a collected leaf frame group with
+``factorize_attributes`` + ``CuboidElements``: integer codes, mixed-radix
+element ids and one ``np.bincount`` per per-element sum.
 """
 from __future__ import annotations
 
 from itertools import combinations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,6 +32,45 @@ def cuboids_of_layer(attributes: list[str], layer: int) -> list[list[str]]:
 
 
 ELEM_SEP = "\x1f"
+
+
+def factorize_attributes(pdf, attributes: list[str]) -> dict[str, tuple]:
+    """Each attribute as (a code per row, the uniques the codes index),
+    numbered by first appearance; a null gets a code of its own, as
+    ``groupby(dropna=False)`` keeps it."""
+    import pandas as pd
+
+    return {a: pd.factorize(pdf[a], use_na_sentinel=False) for a in attributes}
+
+
+class CuboidElements:
+    """The elements of ``cuboid`` over the rows ``mask`` selects, given
+    factorize_attributes' ``enc``: the numpy twin of ``groupby(cuboid,
+    sort=False, dropna=False)``. ``rows``: the selected row positions;
+    ``inv``: each one's element; ``first``: each element's first row.
+    Elements are numbered by first appearance, so an argmax over them
+    breaks ties as ``idxmax`` does. ``sum``/``mean`` take selected rows."""
+
+    def __init__(self, enc: dict, cuboid: list[str], mask):
+        self.rows = rows = np.flatnonzero(mask)
+        ids, radix = np.zeros(len(rows), dtype=np.int64), 1
+        for c, k in ((enc[d][0], len(enc[d][1])) for d in cuboid):  # mixed radix
+            if radix > np.iinfo(np.int64).max // max(k, 1):
+                uniq, ids = np.unique(ids, return_inverse=True)  # renumber densely
+                radix = len(uniq)
+            ids, radix = ids * k + c[rows], radix * k
+        _, first, inv = np.unique(ids, return_index=True, return_inverse=True)
+        order = np.argsort(first)  # first appearance; its inverse renumbers
+        self.n, self.inv, self.first = len(order), np.argsort(order)[inv], rows[first[order]]
+
+    def sum(self, values):
+        return np.bincount(self.inv, weights=values, minlength=self.n)
+
+    def mean(self, values):
+        """NaN is taken as missing; NaN for an element with no value."""
+        ok = ~np.isnan(values)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            return self.sum(np.where(ok, values, 0.0)) / self.sum(ok)
 
 
 # Gate-surface accumulator type. Validity envelope: casting each per-row

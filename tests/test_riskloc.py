@@ -78,3 +78,35 @@ def test_riskloc_no_anomaly(spark):
     # risk threshold
     for rc in causes:
         assert rc["risk score"] >= 0.5
+
+
+def test_riskloc_distributed_unpersists_when_the_search_raises(spark, monkeypatch, caplog):
+    """A raising search must not leak the persisted base frame."""
+    import importlib
+    import logging
+
+    # the package re-exports the riskloc function under the module's name
+    rl = importlib.import_module("riskloc_spark.operators.riskloc")
+    search = rl.search_anomaly
+
+    def failing(*args, **kwargs):
+        search(*args, **kwargs)  # materializes the cached base frame
+        raise RuntimeError("search failed")
+
+    monkeypatch.setattr(rl, "search_anomaly", failing)
+    df = spark.createDataFrame(make_instance())
+    start = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with caplog.at_level(logging.DEBUG, logger="riskloc_spark"):
+        with pytest.raises(RuntimeError, match="search failed"):
+            riskloc(df, ["a", "b", "c"], driver_rows=None)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == start
+    assert "distributed path, forced by driver_rows=None" in caplog.text
+
+
+def test_riskloc_logs_the_driver_path_and_its_leaf_count(spark, caplog):
+    import logging
+
+    df = spark.createDataFrame(make_instance())
+    with caplog.at_level(logging.DEBUG, logger="riskloc_spark"):
+        riskloc(df, ["a", "b", "c"], driver_rows=1000)
+    assert "driver path, 250 leaves <= driver_rows=1000" in caplog.text
