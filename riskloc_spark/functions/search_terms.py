@@ -1,14 +1,15 @@
 """Per-element terms of the cuboid searches: riskloc's risk scores (ref
-algorithms/riskloc.py:50-72) and autoroot's NPS (ref
-algorithms/autoroot.py:94-144).
+algorithms/riskloc.py:50-72), autoroot's NPS (ref
+algorithms/autoroot.py:94-144) and hotspot's ripple-effect leaf terms
+(ref algorithms/hotspot.py:29-63).
 
 Each term is written once, as plain arithmetic over its operands, and
 serves both the distributed and the driver-side pandas search: operands
 are Spark Columns or pandas Series, and ``ops`` is
 ``scores.SPARK_OPS`` or ``scores.NUMPY_OPS`` (see functions/scores.py).
 A per-element sum arrives as a window Column on Spark and, on the
-driver, as an ``np.bincount`` gathered back to the leaves (riskloc) or
-a group ``transform`` (autoroot); a global total as a float.
+driver, as an ``np.bincount`` gathered back to the leaves (riskloc,
+hotspot) or a group ``transform`` (autoroot); a global total as a float.
 """
 from __future__ import annotations
 
@@ -59,3 +60,22 @@ def nps(ops, Ap_e, Bp_e, n_full, N, Bp_tot):
     n_rest = N - n_full
     c = ops.where(n_rest > 0, (Bp_tot - Bp_e) / n_rest, 0.0)
     return 1 - ((a + c) / (b + c))
+
+
+# --- hotspot ------------------------------------------------------------------
+
+
+def ripple_ratio(ops, V, F):
+    """An element's ripple ratio V/F (its summed real over its summed
+    predict), 0 where F is 0: the factor by which the ripple effect
+    rescales each of its leaves' forecasts."""
+    return ops.where(F != 0, V / F, 0.0)
+
+
+def abs_and_square(ops, real, expected):
+    """|real - expected| and (real - expected)^2 of a leaf: the B/Q terms
+    against the forecast, the A/P terms against the ripple-rescaled one.
+    x*x, not pow(x, 2): an exactly-rounded IEEE multiply, identical across
+    engines (libm pow may differ by 1 ulp)."""
+    d = real - expected
+    return ops.abs(d), d * d

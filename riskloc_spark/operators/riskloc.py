@@ -44,8 +44,9 @@ from riskloc_spark.functions.scores import (
 )
 from riskloc_spark.functions.search_terms import rescaled_abs_deviation, risk_scores
 from riskloc_spark.plans.cuboid import (
-    CuboidElements, cuboids_of_layer, elem_expr, factorize_attributes,
+    DECIMAL_EXACT, CuboidElements, cuboids_of_layer, elem_expr, factorize_attributes,
 )
+from riskloc_spark.plans.collect import driver_leaves
 
 _log = logging.getLogger(__name__)
 
@@ -103,13 +104,11 @@ def _layer_scores(
     w = Window.partitionBy("cid", "elem")
     valid = (F.col("real") != 0) & (F.col("predict") != 0)
 
-    _DEC = "decimal(38,9)"
-
     def _wsum(term):
         # exact_sums: DECIMAL window sums are order-independent, so the
         # oracle gate surface is stable across runs (search path: doubles).
         if exact_sums:
-            return F.sum(term.cast(_DEC)).over(w).cast("double")
+            return F.sum(term.cast(DECIMAL_EXACT)).over(w).cast("double")
         return F.sum(term).over(w)
 
     # low-risk needs R,P sums over the element's valid rows (ref
@@ -124,14 +123,14 @@ def _layer_scores(
 
     def _sum(term):
         if exact_sums:
-            return F.sum(term.cast(_DEC)).cast("double")
+            return F.sum(term.cast(DECIMAL_EXACT)).cast("double")
         return F.sum(term)
 
     def _avg(name):
         if exact_sums:
             # avg as exact-sum / non-null count (F.avg on doubles is
             # order-dependent via its partial sums).
-            return F.sum(F.col(name).cast(_DEC)).cast("double") / F.count(name)
+            return F.sum(F.col(name).cast(DECIMAL_EXACT)).cast("double") / F.count(name)
         return F.avg(name)
 
     agg = ex.groupBy("cid", "elem").agg(
@@ -433,20 +432,11 @@ def riskloc(
     Both paths use the single definitions in functions.scores and
     functions.search_terms and are parity-tested; ``driver_rows=None``
     forces the distributed path. The path taken and why log at DEBUG."""
-    if driver_rows is not None:
-        cols = ("real", "predict") + (measures(True) if derived else ())
-        sel = df.select(
-            *[F.coalesce(F.col(a).cast("string"), F.lit("None")).alias(a)
-              for a in attributes],
-            *[F.col(m).cast("double").alias(m) for m in cols],
-        )
-        pdf = sel.limit(driver_rows + 1).toPandas()
-        if len(pdf) <= driver_rows:
-            _log.debug("riskloc: driver path, %d leaves <= driver_rows=%d", len(pdf), driver_rows)
-            return _riskloc_driver(pdf, attributes, risk_threshold, pep_threshold, n_remove,
-                                   remove_relative, prune_elements, max_iterations, derived)
-    _log.debug("riskloc: distributed path, %s", "forced by driver_rows=None" if driver_rows is None
-               else f"more than driver_rows={driver_rows} leaves")
+    cols = ("real", "predict") + (measures(True) if derived else ())
+    pdf = driver_leaves(df, attributes, cols, driver_rows, _log, "riskloc")
+    if pdf is not None:
+        return _riskloc_driver(pdf, attributes, risk_threshold, pep_threshold, n_remove,
+                               remove_relative, prune_elements, max_iterations, derived)
 
     df = add_explanatory_power(df, derived)
     df = add_deviation_score(df)

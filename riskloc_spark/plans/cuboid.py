@@ -8,9 +8,8 @@ whole cuboid costs a single shuffle regardless of element count.
 
 The decomposition trick for hotspot (ref algorithms/hotspot.py:40-63):
 gps / ps scores of a *set* of elements are exact functions of per-element
-sums, because the ripple ratio V_e/F_e is per-element. So MCTS can run on
-the driver over this compact stats frame — no leaf data leaves the
-executors.
+sums, because the ripple ratio V_e/F_e is per-element. So MCTS runs on
+the driver over a compact stats table (``element_stats_all`` on Spark).
 
 Driver-side searches over a collected leaf frame group with
 ``factorize_attributes`` + ``CuboidElements``: integer codes, mixed-radix
@@ -23,6 +22,9 @@ from itertools import combinations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from riskloc_spark.functions.scores import SPARK_OPS
+from riskloc_spark.functions.search_terms import abs_and_square, ripple_ratio
 
 
 def cuboids_of_layer(attributes: list[str], layer: int) -> list[list[str]]:
@@ -103,7 +105,10 @@ def elem_expr(cuboid: list[str], sep: str = ELEM_SEP):
 def element_stats_all(
     df: DataFrame, cuboids: list[list[str]], exact_sums: bool = False
 ) -> DataFrame:
-    """element_stats for MANY cuboids in ONE shuffle.
+    """Per-element sufficient statistics of hotspot's set scores, for MANY
+    cuboids in ONE shuffle. For element e: n_e, V_e=sum(real),
+    F_e=sum(predict), B_e/Q_e = sum |d| / d*d of d = real - predict, and
+    A_e/P_e the same of real - predict*V_e/F_e (search_terms).
 
     Each row explodes into one (cid, elem-key) pair per cuboid; a single
     window + groupBy on (cid, elem) then yields every cuboid's element
@@ -134,60 +139,19 @@ def element_stats_all(
     else:
         V = F.sum("real").over(w)
         Fs = F.sum("predict").over(w)
-    ratio = F.when(Fs != 0, V / Fs).otherwise(F.lit(0.0))
-    a = F.col("predict") * ratio
-
-    ex = ex.withColumn("__a", a)
-    diff = F.col("real") - F.col("predict")
-    diffa = F.col("real") - F.col("__a")
+    ex = ex.withColumn("__a", F.col("predict") * ripple_ratio(SPARK_OPS, V, Fs))
+    B, Q = abs_and_square(SPARK_OPS, F.col("real"), F.col("predict"))
+    A, P = abs_and_square(SPARK_OPS, F.col("real"), F.col("__a"))
 
     def s(term):
-        # x*x (exactly-rounded IEEE multiply, identical across engines)
-        # instead of pow(x, 2) — libm pow may differ by 1 ulp per engine.
         return F.sum(term.cast(DECIMAL_EXACT) if exact_sums else term)
 
     return ex.groupBy("cid", "elem").agg(
         F.count(F.lit(1)).alias("n_e"),
         s(F.col("real")).alias("V_e"),
         s(F.col("predict")).alias("F_e"),
-        s(F.abs(diff)).alias("B_e"),
-        s(diff * diff).alias("Q_e"),
-        s(F.abs(diffa)).alias("A_e"),
-        s(diffa * diffa).alias("P_e"),
-    )
-
-
-def element_stats(df: DataFrame, cuboid: list[str]) -> DataFrame:
-    """Per-element sufficient statistics for set-scoring (hotspot ps/gps).
-
-    For element e: n_e, V_e=sum(real), F_e=sum(predict),
-    B_e = sum|real-predict|,            Q_e = sum (real-predict)^2,
-    A_e = sum|real - predict*V_e/F_e|,  P_e = sum (real - predict*V_e/F_e)^2.
-
-    Window + groupBy share the same hash partitioning → one shuffle.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*cuboid)
-    V = F.sum("real").over(w)
-    Fs = F.sum("predict").over(w)
-    ratio = F.when(Fs != 0, V / Fs).otherwise(F.lit(0.0))
-    a = F.col("predict") * ratio
-
-    df2 = df.withColumn("__a", a)
-    return df2.groupBy(*cuboid).agg(
-        F.count(F.lit(1)).alias("n_e"),
-        F.sum("real").alias("V_e"),
-        F.sum("predict").alias("F_e"),
-        F.sum(F.abs(F.col("real") - F.col("predict"))).alias("B_e"),
-        # x*x, not pow(x, 2): exactly-rounded IEEE multiply, matching
-        # element_stats_all and the DuckDB twins bitwise
-        F.sum(
-            (F.col("real") - F.col("predict"))
-            * (F.col("real") - F.col("predict"))
-        ).alias("Q_e"),
-        F.sum(F.abs(F.col("real") - F.col("__a"))).alias("A_e"),
-        F.sum(
-            (F.col("real") - F.col("__a")) * (F.col("real") - F.col("__a"))
-        ).alias("P_e"),
+        s(B).alias("B_e"),
+        s(Q).alias("Q_e"),
+        s(A).alias("A_e"),
+        s(P).alias("P_e"),
     )

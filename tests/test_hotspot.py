@@ -6,8 +6,12 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from riskloc_spark.operators.hotspot import _SetScorer, hotspot
-from riskloc_spark.plans.cuboid import element_stats
+from riskloc_spark.operators.hotspot import (
+    _collect_stats_all,
+    _driver_stats,
+    _SetScorer,
+    hotspot,
+)
 
 
 def make_instance(seed=5, anomaly=("a1",), severity=0.6):
@@ -61,30 +65,31 @@ def inst(spark):
 
 @pytest.mark.parametrize("cuboid", [["a"], ["b"], ["a", "b"]])
 def test_scorer_decomposition_matches_numpy(spark, inst, cuboid):
+    """The element stats of both paths: the driver's np.bincount sums over
+    the collected leaves and the distributed element_stats_all job."""
     pdf, df = inst
-    stats_rows = element_stats(df, cuboid).collect()
-    stats = {
-        tuple(str(r[d]) for d in cuboid): {
-            k: float(r[k]) for k in ("n_e", "V_e", "F_e", "A_e", "B_e", "P_e", "Q_e")
-        }
-        for r in stats_rows
-    }
     totals = {
         "N": float(len(pdf)),
         "B_tot": float(np.abs(pdf["real"] - pdf["predict"]).sum()),
         "Q_tot": float(((pdf["real"] - pdf["predict"]) ** 2).sum()),
     }
-    scorer = _SetScorer(stats, totals)
+    driver_totals, (driver_stats,) = _driver_stats(pdf, ["a", "b"], [cuboid], None)
+    for k, v in totals.items():
+        assert abs(driver_totals[k] - v) < 1e-9, k
+    (spark_stats,) = _collect_stats_all(df, [cuboid], None)
+    assert sorted(driver_stats) == sorted(spark_stats)
+    for stats in (driver_stats, spark_stats):
+        scorer = _SetScorer(stats, totals)
 
-    keys = sorted(stats.keys())
-    for selected in [keys[:1], keys[:2], keys[:3]]:
-        got_gps = scorer.gps(selected)
-        want_gps = numpy_gps(pdf, cuboid, selected)
-        assert abs(got_gps - want_gps) < 1e-9, (cuboid, selected)
+        keys = sorted(stats.keys())
+        for selected in [keys[:1], keys[:2], keys[:3]]:
+            got_gps = scorer.gps(selected)
+            want_gps = numpy_gps(pdf, cuboid, selected)
+            assert abs(got_gps - want_gps) < 1e-9, (cuboid, selected)
 
-        got_ps = scorer.ps(selected)
-        want_ps = numpy_ps(pdf, cuboid, selected)
-        assert abs(got_ps - want_ps) < 1e-9, (cuboid, selected)
+            got_ps = scorer.ps(selected)
+            want_ps = numpy_ps(pdf, cuboid, selected)
+            assert abs(got_ps - want_ps) < 1e-9, (cuboid, selected)
 
 
 def test_hotspot_finds_anomaly(spark, inst):
@@ -478,3 +483,102 @@ def test_hotspot_gps_nonexhaustive_matches_exhaustive_3dim(spark):
             map(tuple, want["elements"])
         ), (seed, got, want)
         assert abs(got["score"] - want["score"]) < 1e-9, (seed, got, want)
+
+
+# ---------------------------------------------------------------------------
+# The driver path (collected leaves, np.bincount stats) vs the distributed one
+# ---------------------------------------------------------------------------
+
+def _same_candidate(got, want):
+    assert (got["layer"], got["cuboid"], got["elements"]) == (
+        want["layer"], want["cuboid"], want["elements"]), (got, want)
+    assert abs(got["score"] - want["score"]) < 1e-9, (got, want)
+
+
+@pytest.mark.parametrize("frame", ["instance", "null_measure", "null_attribute", "three_dims"])
+def test_hotspot_driver_path_matches_distributed(spark, frame):
+    """Same layer, cuboid, element list and score on either path, under
+    gps and ps, with and without the max_elements cap. A null measure is
+    skipped by every sum, as Spark's sum skips it."""
+    from tests.test_null_attributes import SCHEMA, make_null_instance
+
+    if frame == "instance":
+        df, dims = spark.createDataFrame(make_instance()), ["a", "b"]
+    elif frame == "null_measure":
+        pdf = _pruning_instance().astype({"real": object, "predict": object})
+        pdf.loc[[0, 6], "real"] = None  # each leaf shares its (a, b, c) with one more
+        pdf.loc[[3, 9], "predict"] = None
+        schema = "a string, b string, c string, real double, predict double"
+        df, dims = spark.createDataFrame(pdf, schema), ["a", "b", "c"]
+    elif frame == "null_attribute":
+        df, dims = spark.createDataFrame(make_null_instance(), schema=SCHEMA), ["a", "b", "c"]
+    else:
+        df, dims = spark.createDataFrame(_pruning_instance()), ["a", "b", "c"]
+    for scoring, cap in itertools.product(("gps", "ps"), (5, None)):
+        opts = dict(pt=0.8, m=100, scoring=scoring, max_elements=cap, seed=1)
+        _same_candidate(hotspot(df, dims, **opts), hotspot(df, dims, driver_rows=None, **opts))
+
+
+def _tied_ps_instance():
+    """a0-a3 carry identical leaves with the same drop, so their single
+    ps scores tie exactly; the search expands tied elements in element
+    order, which therefore shows in the returned element list."""
+    rows = []
+    for a in [f"a{i}" for i in range(8)]:
+        for j, b in enumerate([f"b{i}" for i in range(4)]):
+            predict = 100.0 + 10 * j
+            real = predict * (0.6 if a in ("a0", "a1", "a2", "a3") else 1.0 + 0.01 * (j - 1.5))
+            rows.append((a, b, real, predict))
+    return pd.DataFrame(rows, columns=["a", "b", "real", "predict"])
+
+
+def test_hotspot_element_order_is_independent_of_path_and_shuffle(spark):
+    """Each cuboid's elements are searched in key order: the collect order
+    of the distributed stats changes with the shuffle layout (here: AQE
+    off, 2 vs 7 partitions), the driver path's order is first appearance."""
+    df = spark.createDataFrame(_tied_ps_instance())
+    opts = dict(pt=1.5, m=200, scoring="ps", seed=0, max_elements=None)
+    want = hotspot(df, ["a", "b"], **opts)
+    assert len(want["elements"]) > 1
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for partitions in ("2", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            assert hotspot(df, ["a", "b"], driver_rows=None, **opts) == want, partitions
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+
+
+def test_hotspot_distributed_unpersists_when_it_raises(spark, monkeypatch, caplog):
+    """A totals pass that fails after it has materialized the persisted
+    frame must still release the persist."""
+    import logging
+
+    df = spark.createDataFrame(make_instance())
+    first = type(df).first
+
+    def failing(self):
+        first(self)  # runs the totals job over the cached frame
+        raise RuntimeError("totals failed")
+
+    monkeypatch.setattr(type(df), "first", failing)
+    start = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with caplog.at_level(logging.DEBUG, logger="riskloc_spark"):
+        with pytest.raises(RuntimeError, match="totals failed"):
+            hotspot(df, ["a", "b"], driver_rows=None)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == start
+    assert "hotspot: distributed path, forced by driver_rows=None" in caplog.text
+
+
+def test_hotspot_logs_which_path_ran_and_why(spark, inst, caplog):
+    import logging
+
+    _, df = inst
+    with caplog.at_level(logging.DEBUG, logger="riskloc_spark"):
+        hotspot(df, ["a", "b"], m=20)
+        hotspot(df, ["a", "b"], m=20, driver_rows=10)
+    assert "hotspot: driver path, 20 leaves <= driver_rows=200000" in caplog.text
+    assert "hotspot: distributed path, more than driver_rows=10 leaves" in caplog.text
