@@ -28,11 +28,13 @@ from riskloc_spark.data import (
     rca_events_derived,
 )
 from riskloc_spark.functions.scores import (
+    NUMPY_OPS,
     add_deviation_score,
     add_explanatory_power,
     add_partition,
     add_weight,
     get_cutoff,
+    half_deviation,
 )
 from riskloc_spark.functions import text as T
 from riskloc_spark.operators.adtributor import (
@@ -4453,9 +4455,9 @@ def streaming_kpi_append_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _squeeze_dev_array(spark: SparkSession, sf_dir: str):
     """Shared driver-side deviation array for the squeeze clustering
-    gates — ONE copy of the min-real shift + zero-denominator deviation
-    algebra (squeeze()'s driver path), so the four gates can never
-    drift apart on it."""
+    gates — ONE copy of the min-real shift (squeeze()'s driver path) and
+    scores.half_deviation, so the four gates can never drift apart on
+    it."""
     import numpy as np
 
     df = rca_events(spark, sf_dir).filter(F.col("predict") > 0)
@@ -4466,11 +4468,8 @@ def _squeeze_dev_array(spark: SparkSession, sf_dir: str):
     mn = float(real.min()) if len(real) else 0.0
     if mn < 0:
         real = real - mn
-    denom = pdf["predict"].to_numpy() + real
     with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(
-            denom == 0, 0.0, (pdf["predict"].to_numpy() - real) / denom
-        )
+        return half_deviation(NUMPY_OPS, real, pdf["predict"].to_numpy())
 
 
 def squeeze_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:

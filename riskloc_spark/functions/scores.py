@@ -57,6 +57,13 @@ def deviation(ops, real, predict):
     return ops.where(denom == 0, 0.0, 2.0 * (predict - real) / denom)
 
 
+def half_deviation(ops, real, predict):
+    """squeeze's leaf deviation (predict-real)/(predict+real), half of
+    ``deviation``, 0 where the denominator is 0."""
+    denom = predict + real
+    return ops.where(denom == 0, 0.0, (predict - real) / denom)
+
+
 def explanatory_power(col, tot, derived: bool):
     """EP per row (ref utils/element_scores.py:4-26); ``col(m)`` is the
     row's measure ``m`` and ``tot(m)`` its total. Plain: (real-predict)

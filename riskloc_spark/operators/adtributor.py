@@ -1,18 +1,23 @@
 """Adtributor and recursive (reverse) Adtributor.
 
 Parity: reference algorithms/adtributor.py:6-43 and
-rev_rec_adtributor.py:6-74. Fully declarative: the per-dimension element
-merge is a union of groupBy aggregates; candidate selection is a window
-cumsum over surprise-ordered elements. No driver-side leaf data — only the
-final (tiny) candidate sets are collected. Element EP and surprise are the
-functions.scores definitions over one shared totals pass, on every path:
-crossJoined totals, per-branch window totals, and the pandas fast path of
-the recursive search.
+rev_rec_adtributor.py:6-74. Both operators pick their path as riskloc
+does (plans.collect.driver_leaves): a leaf frame of at most
+``driver_rows`` rows is collected by the ``limit(k+1).toPandas()`` probe
+and searched on the driver, with no further Spark job. Above the bound the
+search is declarative: the per-dimension element merge is one explode +
+groupBy, candidate selection a window cumsum over surprise-ordered
+elements, and only the final (tiny) candidate sets are collected. Element
+EP and surprise are the functions.scores definitions over one shared
+totals pass, on every path: crossJoined totals, per-branch window totals,
+and the pandas driver paths.
 """
 from __future__ import annotations
 
+import logging
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -24,6 +29,9 @@ from riskloc_spark.functions.scores import (
     measures,
     surprise,
 )
+from riskloc_spark.plans.collect import driver_leaves
+
+_log = logging.getLogger(__name__)
 
 
 def merge_dimensions(df: DataFrame, dimensions: list[str], derived: bool) -> DataFrame:
@@ -107,6 +115,31 @@ def adtributor_candidates(
     ).select("dimension", "element", "ep", "surprise")
 
 
+def _adtributor_pd(pdf, dimensions, teep, tep, k, derived):
+    """adtributor's search over a collected leaf frame: the Spark path's
+    ranking, prefix walk and top-k, on _scored_elements_pd's elements."""
+    el = _scored_elements_pd(pdf, dimensions, derived)
+    cands = []
+    for d in dimensions:
+        g = el[el["dimension"] == d].sort_values(
+            ["surprise", "element"], ascending=[False, True], kind="stable"
+        )
+        ep = g["ep"].to_numpy()
+        qual = ep > teep
+        cum_ep = np.cumsum(np.where(qual, ep, 0.0))
+        stop = np.flatnonzero(qual & (cum_ep > tep))
+        if not len(stop):
+            continue
+        s = stop[0] + 1
+        cands.append({
+            "elements": g["element"].to_numpy()[:s][qual[:s]].tolist(),
+            "explanatory_power": float(cum_ep[s - 1]),
+            "surprise": float(np.nansum(g["surprise"].to_numpy()[:s])),
+            "dimension": d,
+        })
+    return sorted(cands, key=lambda c: c["surprise"], reverse=True)[:k]
+
+
 def adtributor(
     df: DataFrame,
     dimensions: list[str],
@@ -114,10 +147,19 @@ def adtributor(
     tep: float = 0.1,
     k: int = 3,
     derived: bool = False,
+    driver_rows: int | None = 200_000,
 ) -> list[dict[str, Any]]:
     """Reference adtributor.py:23-43. Per dimension: walk elements in
     surprise-desc order, accumulate EP of elements with ep > teep until the
-    cumulative EP exceeds tep; that prefix is the candidate."""
+    cumulative EP exceeds tep; that prefix is the candidate.
+
+    ``driver_rows`` picks the path as riskloc's does: at <= k leaves the
+    probe is the collect and the search runs on the driver
+    (_adtributor_pd); above k, or with ``None``, it runs on Spark. The
+    path taken and why log at DEBUG."""
+    pdf = driver_leaves(df, dimensions, measures(derived), driver_rows, _log, "adtributor")
+    if pdf is not None:
+        return _adtributor_pd(pdf, dimensions, teep, tep, k, derived)
     elements = _scored_elements(df, dimensions, derived)
 
     # Walk elements in surprise-desc order. Note the reference's asymmetry
@@ -506,18 +548,11 @@ def rev_rec_adtributor(
     path, where each recursion DEPTH is one fused explode job across all
     live branches (_rev_rec_distributed_fused). Both paths share the
     recursion body (_refine_and_dedupe) and the candidate-selection /
-    scoring code, and are parity-tested."""
-    if driver_rows is not None:
-        ms = measures(derived)
-        sel = df.select(
-            *[F.coalesce(F.col(a).cast("string"), F.lit("None")).alias(a)
-              for a in dimensions],
-            *[F.col(m).cast("double").alias(m) for m in ms],
-        )
-        pdf = sel.limit(driver_rows + 1).toPandas()
-        if len(pdf) <= driver_rows:
-            return _rev_rec_adtributor_pd(pdf, dimensions, teep, k, derived)
-
+    scoring code, and are parity-tested. The path taken and why log at
+    DEBUG."""
+    pdf = driver_leaves(df, dimensions, measures(derived), driver_rows, _log, "rev_rec_adtributor")
+    if pdf is not None:
+        return _rev_rec_adtributor_pd(pdf, dimensions, teep, k, derived)
     return _rev_rec_distributed_fused(
         df, dimensions, teep, k, derived,
         max_candidates_per_dim=max_candidates_per_dim,

@@ -199,14 +199,14 @@ _STAT_KEYS = ("n_e", "V_e", "F_e", "A_e", "B_e", "P_e", "Q_e")
 def _collect_stats_all(
     df: DataFrame, cuboids: list[list[str]], max_elements: int | None
 ) -> list[dict[tuple, dict[str, float]]]:
-    """Stats for EVERY cuboid in one fused job (element_stats_all)."""
+    """Stats for EVERY cuboid in one fused job (element_stats_all). A sum
+    over only null measures (null on Spark) is 0, as on the driver path."""
     stats_df = element_stats_all(df, cuboids)
     if max_elements is not None:
         from pyspark.sql import Window
 
-        w = Window.partitionBy("cid").orderBy(
-            F.abs(F.col("V_e") - F.col("F_e")).desc(), F.col("elem").asc()
-        )
+        V, Fs = (F.coalesce(F.col(c), F.lit(0.0)) for c in ("V_e", "F_e"))
+        w = Window.partitionBy("cid").orderBy(F.abs(V - Fs).desc(), F.col("elem").asc())
         stats_df = (
             stats_df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= max_elements)
@@ -215,7 +215,7 @@ def _collect_stats_all(
     out: list[dict[tuple, dict[str, float]]] = [dict() for _ in cuboids]
     for r in stats_df.collect():
         out[r["cid"]][tuple(r["elem"].split(ELEM_SEP))] = {
-            k: float(r[k]) for k in _STAT_KEYS
+            k: float(r[k] or 0.0) for k in _STAT_KEYS
         }
     return out
 
@@ -358,7 +358,7 @@ def hotspot(
             totals_row = df.agg(
                 F.count(F.lit(1)).alias("N"), F.sum(B).alias("B_tot"), F.sum(Q).alias("Q_tot")
             ).first()
-            totals = {k: float(totals_row[k]) for k in ("N", "B_tot", "Q_tot")}
+            totals = {k: float(totals_row[k] or 0.0) for k in ("N", "B_tot", "Q_tot")}
             # ALL cuboid stats in one fused job — pruning only filters the
             # driver-side element lists, so precollection is semantics-free
             all_stats = _collect_stats_all(df, all_cuboids, max_elements)

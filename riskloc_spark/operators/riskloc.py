@@ -44,14 +44,11 @@ from riskloc_spark.functions.scores import (
 )
 from riskloc_spark.functions.search_terms import rescaled_abs_deviation, risk_scores
 from riskloc_spark.plans.cuboid import (
-    DECIMAL_EXACT, CuboidElements, cuboids_of_layer, elem_expr, factorize_attributes,
+    DECIMAL_EXACT, ELEM_SEP, CuboidElements, cuboids_of_layer, elem_expr, factorize_attributes,
 )
 from riskloc_spark.plans.collect import driver_leaves
 
 _log = logging.getLogger(__name__)
-
-
-_SEP = "\x1f"
 
 
 def _layer_scores(
@@ -72,7 +69,7 @@ def _layer_scores(
     """
     structs = []
     for idx, cuboid in enumerate(cuboids):
-        elem = elem_expr(cuboid, _SEP)
+        elem = elem_expr(cuboid)
         s = F.struct(F.lit(idx).alias("cid"), elem.alias("elem"))
         excl = None
         if pruned:
@@ -249,8 +246,6 @@ def search_anomaly(
                 )
             )
 
-        from functools import reduce
-
         rows = reduce(lambda a, b: a.unionByName(b), parts).collect()
 
         for r in rows:
@@ -279,7 +274,7 @@ def search_anomaly(
                 if r["ep"] > best["ep_score"]:
                     cuboid = cuboids[r["cuboid_idx"]]
                     best = {
-                        "elements": [tuple(r["element"].split(_SEP))],
+                        "elements": [tuple(r["element"].split(ELEM_SEP))],
                         "high risk score": r["high"],
                         "low risk score": r["low"],
                         "risk score": r["risk"],

@@ -15,6 +15,10 @@ anomaly_amount_fileter.py). Spark-first division of labor:
   same size stands in (the reference's method is histogram-based, so
   the approximation is semantics-preserving). Cluster membership goes
   back distributed as range predicates; raw rows never reach the driver.
+* a driver-sized leaf frame (at most ``driver_rows`` rows) is instead
+  collected by the shared probe (plans.collect.driver_leaves), and the
+  clustering and the locate run on the driver, each cuboid's elements
+  grouped once by plans.cuboid's integer-coded kernel.
 
 Deviations from the reference, both forced by environment (kneed/scipy
 unavailable) and documented here:
@@ -25,6 +29,7 @@ unavailable) and documented here:
 """
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from typing import Any
 
@@ -34,6 +39,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from riskloc_spark.data import local_rows_df
+from riskloc_spark.functions.scores import NUMPY_OPS, SPARK_OPS, half_deviation
+from riskloc_spark.plans.collect import driver_leaves
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -831,111 +840,72 @@ def _locate_all(
 
 
 def _locate_in_cuboid_local(
-    pdf,
     cuboid: list[str],
+    elements: tuple,
+    leaves: dict,
     cluster_mask,
     normal_mask,
     options: SqueezeOptions,
     derived: bool = False,
 ) -> tuple[list[dict[str, str]], float]:
-    """pandas mirror of _locate_in_cuboid — same stats, ranks, and ps
-    score; parity-tested against the distributed path."""
-    import pandas as pd
-
-    sel = (cluster_mask | normal_mask)
-    assigns = {"__abn": cluster_mask.astype(int)}
-    if derived:
-        for m in ("real_a", "predict_a", "real_b", "predict_b"):
-            assigns[f"__{m}sel"] = np.where(sel, pdf[m], np.nan)
-    else:
-        assigns["__vsel"] = np.where(sel, pdf["real"], np.nan)
-        assigns["__fsel"] = np.where(sel, pdf["predict"], np.nan)
-    t = pdf.assign(**assigns)
-    g = t.groupby(cuboid, sort=False)
-    sum_cols = (
-        dict(
-            Va_e=("__real_asel", "sum"),
-            Fa_e=("__predict_asel", "sum"),
-            Vb_e=("__real_bsel", "sum"),
-            Fb_e=("__predict_bsel", "sum"),
-        )
-        if derived
-        else dict(V_e=("__vsel", "sum"), F_e=("__fsel", "sum"))
-    )
-    stats = g.agg(
-        num_elements=("__abn", "sum"),
-        descents=("__abn", "size"),
-        **sum_cols,
-    )
-    stats = stats[stats["num_elements"] > 0]
-    if not len(stats):
-        return [], float("-inf")
-
-    # element-key pre-sort, then stable ratio sort: same deterministic
+    """One (cluster, cuboid) pair of the locate phase on the driver: the
+    same stats, ranks and ps score as _locate_all. ``elements`` is
+    (g, by_key, keys): the cuboid's plans.cuboid.CuboidElements over all
+    leaves, its element ids in key order, and per dimension each
+    element's value; ``leaves`` holds the leaf arrays (_squeeze_driver)."""
+    g, by_key, keys = elements
+    sel = cluster_mask | normal_mask
+    num_elements = g.sum(cluster_mask)
+    descents = np.bincount(g.inv, minlength=g.n)
+    # element-key order, then a stable ratio sort: the same deterministic
     # tie order as the distributed _locate_all ranking
-    stats = stats.sort_index()
-    order = (stats["num_elements"] / stats["descents"].clip(lower=1e-4)).sort_values(
-        ascending=False, kind="stable"
-    )
-    rows = stats.loc[order.index]
-    total_elements = g.ngroups
+    by_key = by_key[num_elements[by_key] > 0]
+    if not len(by_key):
+        return [], float("-inf")
+    ratio = num_elements[by_key] / np.maximum(descents[by_key], 1e-4)
+    ranked = by_key[np.argsort(-ratio, kind="stable")]
     n_partitions = min(
-        len(rows), options.max_num_elements_single_cluster, total_elements - 1
+        len(ranked), options.max_num_elements_single_cluster, g.n - 1
     )
     if n_partitions <= 0:
         return [], float("-inf")
+    top = ranked[:n_partitions]
 
-    keys = [
-        k if isinstance(k, tuple) else (k,) for k in rows.index[:n_partitions]
-    ]
-    rank_of = {k: i + 1 for i, k in enumerate(keys)}
-    key_series = pd.Series(
-        list(zip(*[pdf[d] for d in cuboid])), index=pdf.index
-    )
-    rank = key_series.map(rank_of)
+    def prefix(m):  # cumulative sums over the ranked elements' selected leaves
+        return np.cumsum(g.sum(np.where(sel, leaves["sum_" + m], 0.0))[top])
 
     if derived:
-        va = np.cumsum(rows["Va_e"].fillna(0.0).to_numpy())
-        fa = np.cumsum(rows["Fa_e"].fillna(0.0).to_numpy())
-        vb = np.cumsum(rows["Vb_e"].fillna(0.0).to_numpy())
-        fb = np.cumsum(rows["Fb_e"].fillna(0.0).to_numpy())
+        va, fa, vb, fb = map(prefix, ("real_a", "predict_a", "real_b", "predict_b"))
+        r_ps = [_derived_ripple(*x) for x in zip(va, vb, fa, fb)]
     else:
-        v_prefix = np.cumsum(rows["V_e"].fillna(0.0).to_numpy())
-        f_prefix = np.cumsum(rows["F_e"].fillna(0.0).to_numpy())
+        v_prefix, f_prefix = prefix("real"), prefix("predict")
+        r_ps = [float(v / f) if f else 0.0 for v, f in zip(v_prefix, f_prefix)]
 
-    sub_mask = (cluster_mask | normal_mask).to_numpy()
-    real = pdf["real"].to_numpy()
-    predict = pdf["predict"].to_numpy()
-    rank_np = rank.to_numpy(dtype=float)
-
-    def div(x: float, y: float) -> float:
-        if y and y > 0:
-            return x / y
-        return 0.0 if x == 0 else float("inf")
+    # the selected leaves in row order, each with its element's rank (0:
+    # unranked), so every sum below adds the leaves in row order
+    rank_of = np.zeros(g.n, dtype=np.int64)
+    rank_of[top] = np.arange(1, n_partitions + 1)
+    rank = rank_of[g.inv[sel]]
+    ad = leaves["abs_dev"][sel]
+    in_top = rank > 0
+    real_t, predict_t = leaves["real"][sel][in_top], leaves["predict"][sel][in_top]
+    rank_t, ad_t = rank[in_top], ad[in_top]
 
     best_p, best_score = 1, float("-inf")
-    for p in range(1, n_partitions + 1):
-        if derived:
-            r_p = _derived_ripple(va[p - 1], vb[p - 1], fa[p - 1], fb[p - 1])
-        else:
-            r_p = (
-                float(v_prefix[p - 1] / f_prefix[p - 1])
-                if f_prefix[p - 1]
-                else 0.0
-            )
-        in_p = sub_mask & ~np.isnan(rank_np) & (rank_np <= p)
-        out_p = sub_mask & ~in_p
-        d1 = float(np.abs(real[in_p] - predict[in_p] * r_p).sum())
+    for p, r_p in enumerate(r_ps, start=1):
+        in_p = rank_t <= p
+        out_p = ~in_top | (rank > p)
+        d1 = float(np.abs(real_t[in_p] - predict_t[in_p] * r_p).sum())
         n1 = float(in_p.sum())
-        d2 = float(np.abs(real[out_p] - predict[out_p]).sum())
+        d2 = float(ad[out_p].sum())
         n2 = float(out_p.sum())
-        b1 = float(np.abs(real[in_p] - predict[in_p]).sum())
-        denom = div(b1, n1) + div(d2, n2)
-        score = 1 - (div(d1, n1) + div(d2, n2)) / denom if denom else float("-inf")
+        b1 = float(ad_t[in_p].sum())
+        denom = _div(b1, n1) + _div(d2, n2)
+        score = 1 - (_div(d1, n1) + _div(d2, n2)) / denom if denom else float("-inf")
         if score > best_score:
             best_p, best_score = p, score
 
-    rc = [dict(zip(cuboid, (str(v) for v in k))) for k in keys[:best_p]]
+    rc = [dict(zip(cuboid, (str(k[e]) for k in keys))) for e in top[:best_p]]
     return rc, best_score
 
 
@@ -945,13 +915,25 @@ def _squeeze_driver(
     options: SqueezeOptions,
     derived: bool = False,
 ) -> list[str]:
-    """Driver-side mirror of the locate phase on a collected leaf frame
-    (attrs as string, real, predict, deviation, metric; derived adds the
-    raw a/b measure columns)."""
-    from riskloc_spark.plans.cuboid import cuboids_of_layer
+    """Driver-side mirror of the cluster + locate phases on a collected
+    leaf frame (attrs as string, real, predict; derived adds the raw a/b
+    measure columns). The attributes are integer-coded once
+    (plans.cuboid.factorize_attributes); each cuboid's elements are built
+    once and shared by the clusters."""
+    from riskloc_spark.plans.cuboid import (
+        CuboidElements,
+        cuboids_of_layer,
+        factorize_attributes,
+    )
 
-    deviations = pdf["deviation"].to_numpy()
-    metrics = pdf["metric"].to_numpy()
+    min_real = float(pdf["real"].min()) if len(pdf) else 0.0
+    real = pdf["real"].to_numpy(dtype=float)
+    predict = pdf["predict"].to_numpy(dtype=float)
+    if min_real < 0:  # injection-error shift (ref squeeze.py:36)
+        real = real - min_real
+    with np.errstate(divide="ignore", invalid="ignore"):
+        deviations = np.asarray(half_deviation(NUMPY_OPS, real, predict))
+    metrics = np.abs(real - predict)
 
     if options.enable_filter and len(metrics):
         threshold = kpi_filter_threshold(
@@ -971,12 +953,13 @@ def _squeeze_driver(
     )
     abn_vals = deviations[in_any]
     min_abn_abs = float(np.min(np.abs(abn_vals))) if len(abn_vals) else 0.0
-    normal_mask = pdf["deviation"].abs() < min_abn_abs
+    normal_mask = np.abs(deviations) < min_abn_abs
 
+    enc = factorize_attributes(pdf, attributes)
     if options.score_weight == "auto":
         n_clusters = len(ranges)
         g_cluster = np.log(n_clusters + 1) / n_clusters
-        num_attr = sum(pdf[a].nunique() for a in attributes)
+        num_attr = sum(len(enc[a][1]) for a in attributes)
         g_attribute = num_attr / np.log(num_attr + 1)
         n_abnormal = int(in_any.sum())
         g_coverage = -np.log(max(n_abnormal, 1) / max(len(deviations), 1))
@@ -984,15 +967,35 @@ def _squeeze_driver(
     else:
         score_weight = float(options.score_weight)
 
+    # the ripple ratio's summands: a null measure adds nothing to an
+    # element's sum, as pandas' and Spark's sums skip it
+    summed = {"real": real, "predict": predict}
+    if derived:
+        summed = {m: pdf[m].to_numpy(dtype=float)
+                  for m in ("real_a", "predict_a", "real_b", "predict_b")}
+    leaves = {"real": real, "predict": predict, "abs_dev": metrics,
+              **{"sum_" + m: np.where(np.isnan(x), 0.0, x) for m, x in summed.items()}}
+    uniques = {a: np.asarray(u, dtype=object) for a, (_, u) in enc.items()}
+    value_rank = {a: np.argsort(np.argsort(u, kind="stable")) for a, u in uniques.items()}
+    built: dict[tuple, tuple] = {}
+
+    def cuboid_elements(cuboid):
+        if tuple(cuboid) not in built:
+            g = CuboidElements(enc, cuboid, np.ones(len(real), dtype=bool))
+            codes = [enc[d][0][g.first] for d in cuboid]
+            by_key = np.lexsort([value_rank[d][c] for d, c in zip(cuboid, codes)][::-1])
+            built[tuple(cuboid)] = (g, by_key, [uniques[d][c] for d, c in zip(cuboid, codes)])
+        return built[tuple(cuboid)]
+
     root_causes: list[str] = []
     for lo, hi in ranges:
-        cluster_mask = (pdf["deviation"] >= lo) & (pdf["deviation"] <= hi)
+        cluster_mask = (deviations >= lo) & (deviations <= hi)
         ret_lists: list[dict[str, Any]] = []
         for layer in range(1, len(attributes) + 1):
             for cuboid in cuboids_of_layer(attributes, layer):
                 rc, score = _locate_in_cuboid_local(
-                    pdf, cuboid, cluster_mask, normal_mask, options,
-                    derived=derived,
+                    cuboid, cuboid_elements(cuboid), leaves, cluster_mask,
+                    normal_mask, options, derived=derived,
                 )
                 ret_lists.append(
                     {
@@ -1034,12 +1037,14 @@ def squeeze(
     ps-score distances run on the ratio, and ONLY the ripple ratio uses
     the separate a/b sums (op over summed frames, squeeze.py:192-199).
 
-    Adaptive like riskloc/autoroot: scoring columns are distributed; when
-    the aggregated leaf frame is driver-sized (limit-probe), the
-    cluster + locate phase runs vectorized on pandas (it otherwise
-    launches ~3 tiny jobs per cuboid per cluster); both paths share
-    formulas and are parity-tested. ``driver_rows=None`` forces the
-    distributed path."""
+    Adaptive like riskloc/autoroot (plans.collect.driver_leaves): when the
+    leaf frame has at most ``driver_rows`` rows, the ``limit(k+1).
+    toPandas()`` probe is the collect and the cluster + locate phase runs
+    on the driver over plans.cuboid's integer-coded elements, with no
+    further Spark job; above k the scoring columns and the fused locate
+    are distributed. Both paths share formulas and are parity-tested.
+    ``driver_rows=None`` forces the distributed path; the path taken and
+    why log at DEBUG."""
     options = options or SqueezeOptions()
 
     measure_cols = (
@@ -1057,47 +1062,20 @@ def squeeze(
     else:
         df = df.filter(F.col("predict") > 0)
 
-    if driver_rows is not None:
-        # one action: limit-probe and collect the RAW filtered frame (see
-        # riskloc); the min-real shift and deviation/metric columns are
-        # computed locally so no scalar pre-job runs
-        pdf = (
-            df.select(
-                *[F.coalesce(F.col(a).cast("string"), F.lit("None")).alias(a)
-                  for a in attributes],
-                F.col("real").cast("double"),
-                F.col("predict").cast("double"),
-                *[F.col(m).cast("double") for m in measure_cols],
-            )
-            .limit(driver_rows + 1)
-            .toPandas()
-        )
-        if len(pdf) <= driver_rows:
-            min_real = float(pdf["real"].min()) if len(pdf) else 0.0
-            if min_real < 0:
-                pdf = pdf.assign(real=pdf["real"] - min_real)
-            denom = (pdf["predict"] + pdf["real"]).to_numpy()
-            with np.errstate(divide="ignore", invalid="ignore"):
-                dev = np.where(
-                    denom == 0,
-                    0.0,
-                    (pdf["predict"] - pdf["real"]) / denom,
-                )
-            pdf = pdf.assign(
-                deviation=dev, metric=(pdf["real"] - pdf["predict"]).abs()
-            )
-            return _squeeze_driver(pdf, attributes, options, derived=derived)
+    # one action: the probe collects the RAW filtered frame (see riskloc);
+    # the min-real shift and deviation/metric are computed on the driver
+    pdf = driver_leaves(
+        df, attributes, ("real", "predict", *measure_cols), driver_rows, _log, "squeeze"
+    )
+    if pdf is not None:
+        return _squeeze_driver(pdf, attributes, options, derived=derived)
 
     # injection-error shift (ref squeeze.py:36) — on the derived KPI
     min_real = df.agg(F.min("real")).first()[0] or 0.0
     if min_real < 0:
         df = df.withColumn("real", F.col("real") - F.lit(min_real))
 
-    dev = F.when(
-        F.col("predict") + F.col("real") == 0, F.lit(0.0)
-    ).otherwise(
-        (F.col("predict") - F.col("real")) / (F.col("predict") + F.col("real"))
-    )
+    dev = half_deviation(SPARK_OPS, F.col("real"), F.col("predict"))
     df = df.withColumn("deviation", dev).withColumn(
         "metric", F.abs(F.col("real") - F.col("predict"))
     )

@@ -4,8 +4,12 @@ Parity: reference utils/run_utils.py:60-92 (plain + derived a/b pairs)
 and utils/robustspot_data_utils.py:6-64 (RobustSpot minute-grain format).
 
 Spark-first notes:
-* CSVs are read with header-only schema (all strings), then measures are
-  cast explicitly — never ``inferSchema`` (a full extra pass at scale).
+* CSVs are read with an all-string schema, then measures are cast
+  explicitly — never ``inferSchema`` (a full extra pass at scale). For a
+  local uncompressed file the header line is read here and named as
+  Spark would name it (``_c<i>`` for an empty name, ``<name><i>`` for a
+  duplicate), so building the frame starts no Spark job; any other path
+  lets Spark read the header, one job per ``csv()`` call.
 * The derived a/b merge is a join on the attribute columns; at scale both
   sides hash-partition on the same key so it is a single co-located
   shuffle each.
@@ -16,10 +20,48 @@ Spark-first notes:
 """
 from __future__ import annotations
 
+import csv
+import os
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 MEASURES = ("real", "predict")
+_COMPRESSED = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst", ".xz", ".br")
+
+
+def _local_header(spark: SparkSession, path: str) -> list[str] | None:
+    """The column names Spark's header read gives a local uncompressed
+    file, or None for any other path or a header with a doubled quote:
+    the first non-blank line, parsed
+    with Spark's default quote and escape characters (a UTF-8 BOM
+    dropped), an empty name as ``_c<i>``, a name repeated (case-folded
+    unless spark.sql.caseSensitive) as ``<name><i>``."""
+    # a glob or a compressed file is Spark's to expand or decode
+    if (any(ch in path for ch in "*?[{") or path.lower().endswith(_COMPRESSED)
+            or not os.path.isfile(path)):
+        return None
+    with open(path, encoding="utf-8-sig", newline="") as fh:
+        line = next((ln for ln in fh if ln.strip()), "")
+    if '""' in line:  # Spark's parser keeps a doubled quote's quotes in the name
+        return None
+    row = next(csv.reader([line], escapechar="\\", doublequote=False), [])
+    fold = (lambda n: n) if spark.conf.get("spark.sql.caseSensitive") == "true" else str.lower
+    seen = Counter(fold(n) for n in row if n)
+    return [n if n and seen[fold(n)] == 1 else f"{n}{i}" if n else f"_c{i}"
+            for i, n in enumerate(row)]
+
+
+def _read_csv(spark: SparkSession, path: str) -> DataFrame:
+    """A headed CSV as an all-string frame; a local file's header is read
+    here (_local_header) instead of by a Spark job."""
+    reader = spark.read.option("header", True)
+    names = _local_header(spark, path)
+    if names is not None:
+        reader = reader.schema(StructType([StructField(n, StringType()) for n in names]))
+    return reader.csv(path)
 
 
 def _attributes(df: DataFrame, drop: tuple[str, ...]) -> list[str]:
@@ -29,7 +71,7 @@ def _attributes(df: DataFrame, drop: tuple[str, ...]) -> list[str]:
 def read_rca_csv(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
     """Plain format: attribute columns + real + predict
     (ref run_utils.py:88-90). Returns (frame, attributes)."""
-    df = spark.read.option("header", True).csv(path)
+    df = _read_csv(spark, path)
     attrs = _attributes(df, MEASURES)
     df = df.select(
         *attrs,
@@ -44,14 +86,14 @@ def read_rca_csv_derived(
 ) -> tuple[DataFrame, list[str]]:
     """Derived format: '<file>.a.csv' + '<file>.b.csv' joined on the
     attributes; KPI = a/b with NaN->0 (ref run_utils.py:75-86)."""
-    df_a = spark.read.option("header", True).csv(path_a)
+    df_a = _read_csv(spark, path_a)
     attrs = _attributes(df_a, MEASURES)
     df_a = df_a.select(
         *attrs,
         F.col("real").cast("double").alias("real_a"),
         F.col("predict").cast("double").alias("predict_a"),
     )
-    df_b = spark.read.option("header", True).csv(path_b).select(
+    df_b = _read_csv(spark, path_b).select(
         *attrs,
         F.col("real").cast("double").alias("real_b"),
         F.col("predict").cast("double").alias("predict_b"),
@@ -80,7 +122,7 @@ def read_robustspot_csv(
     ``predict_periods`` minutes. Output matches the derived format:
     attrs + real/predict (failure rate) + real_a/real_b/predict_a/
     predict_b."""
-    raw = spark.read.option("header", True).csv(path)
+    raw = _read_csv(spark, path)
     attrs = _attributes(raw, ("min", "value", "cnt"))
     base = raw.select(
         *attrs,

@@ -499,7 +499,8 @@ def _same_candidate(got, want):
 def test_hotspot_driver_path_matches_distributed(spark, frame):
     """Same layer, cuboid, element list and score on either path, under
     gps and ps, with and without the max_elements cap. A null measure is
-    skipped by every sum, as Spark's sum skips it."""
+    skipped by every sum, as Spark's sum skips it; a sum of nulls only is
+    0 on both paths."""
     from tests.test_null_attributes import SCHEMA, make_null_instance
 
     if frame == "instance":
@@ -508,6 +509,8 @@ def test_hotspot_driver_path_matches_distributed(spark, frame):
         pdf = _pruning_instance().astype({"real": object, "predict": object})
         pdf.loc[[0, 6], "real"] = None  # each leaf shares its (a, b, c) with one more
         pdf.loc[[3, 9], "predict"] = None
+        # an element whose only leaf has a null real: Spark's sum is null
+        pdf.loc[len(pdf)] = ["a4", "b4", "c2", None, 60.0]
         schema = "a string, b string, c string, real double, predict double"
         df, dims = spark.createDataFrame(pdf, schema), ["a", "b", "c"]
     elif frame == "null_attribute":

@@ -22,6 +22,11 @@ CASES = {
         {"real": [0.0, 0.0, 5.0, 3.0, N], "predict": [0.0, 4.0, 0.0, 4.0, 2.0]},
         lambda ops, c, t: S.deviation(ops, c("real"), c("predict")),
     ),
+    "half_deviation": (
+        # predict+real == 0, real == 0, predict == 0, plain, null
+        {"real": [0.0, 0.0, 5.0, 3.0, N], "predict": [0.0, 4.0, 0.0, 4.0, 2.0]},
+        lambda ops, c, t: S.half_deviation(ops, c("real"), c("predict")),
+    ),
     "explanatory_power": (
         {"real": [0.0, 10.0, 5.0, N], "predict": [0.0, 4.0, 7.0, 2.0]},
         lambda ops, c, t: S.explanatory_power(c, t, derived=False),

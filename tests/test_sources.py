@@ -112,3 +112,55 @@ def test_jsonl_roundtrip_tricky_content(spark, tmp_path):
         ).collect()
     }
     assert got2 == want
+
+
+# ---------------------------------------------------------------------------
+# The header of a local CSV is read without a Spark job, and named as
+# Spark's own header read names it
+# ---------------------------------------------------------------------------
+
+HEADERS = {
+    "plain": "a,b,real,predict\nx,y,1,2\n",
+    "utf8_bom": "\ufeffa,b,real,predict\nx,y,1,2\n",
+    "quoted_commas": '"a,1",b,"c, d",predict\nx,y,1,2\n',
+    "doubled_quotes": '"a""1",b,"",predict\nx,y,1,2\n',
+    "spaces": " a , b c,real,predict\nx,y,1,2\n",
+    "crlf": "a,b,real,predict\r\nx,y,1,2\r\n",
+    "duplicates": "a,a,real,predict\nx,y,1,2\n",
+    "empty_name": "a,,real,predict\nx,y,1,2\n",
+    "empty_file": "",
+}
+
+
+@pytest.mark.parametrize("name", sorted(HEADERS))
+def test_csv_header_named_as_spark_names_it(spark, tmp_path, name):
+    from riskloc_spark.sources.readers import _read_csv
+
+    p = tmp_path / f"{name}.csv"
+    p.write_bytes(HEADERS[name].encode("utf-8"))
+    want = spark.read.option("header", True).csv(str(p))
+    got = _read_csv(spark, str(p))
+    assert got.columns == want.columns
+    assert got.collect() == want.collect()
+
+
+def _group_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_readers_start_no_spark_job(spark, plain_csv, tmp_path):
+    path, _ = plain_csv
+    (df, attrs), jobs = _group_jobs(spark, "read-plain", lambda: read_rca_csv(spark, path))
+    assert (attrs, jobs) == (["a", "b"], 0)
+    (df, attrs), jobs = _group_jobs(
+        spark, "read-derived", lambda: read_rca_csv_derived(spark, path, path)
+    )
+    assert (attrs, jobs) == (["a", "b"], 0)
+    assert df.count() == 3
