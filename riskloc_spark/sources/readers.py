@@ -34,20 +34,22 @@ _COMPRESSED = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst", ".xz", ".br
 
 def _local_header(spark: SparkSession, path: str) -> list[str] | None:
     """The column names Spark's header read gives a local uncompressed
-    file, or None for any other path or a header with a doubled quote:
-    the first non-blank line, parsed
-    with Spark's default quote and escape characters (a UTF-8 BOM
-    dropped), an empty name as ``_c<i>``, a name repeated (case-folded
-    unless spark.sql.caseSensitive) as ``<name><i>``."""
+    file, or None for any other path or a header with a doubled quote
+    or a backslash: the first non-blank line, parsed with Spark's
+    default quote character (a UTF-8 BOM dropped), an empty name as
+    ``_c<i>``, a name repeated (case-folded unless
+    spark.sql.caseSensitive) as ``<name><i>``."""
     # a glob or a compressed file is Spark's to expand or decode
     if (any(ch in path for ch in "*?[{") or path.lower().endswith(_COMPRESSED)
             or not os.path.isfile(path)):
         return None
     with open(path, encoding="utf-8-sig", newline="") as fh:
         line = next((ln for ln in fh if ln.strip()), "")
-    if '""' in line:  # Spark's parser keeps a doubled quote's quotes in the name
+    # Spark's parser keeps a doubled quote's quotes in the name, and a
+    # backslash outside quotes as a literal character; csv does neither
+    if '""' in line or "\\" in line:
         return None
-    row = next(csv.reader([line], escapechar="\\", doublequote=False), [])
+    row = next(csv.reader([line], doublequote=False), [])
     fold = (lambda n: n) if spark.conf.get("spark.sql.caseSensitive") == "true" else str.lower
     seen = Counter(fold(n) for n in row if n)
     return [n if n and seen[fold(n)] == 1 else f"{n}{i}" if n else f"_c{i}"

@@ -31,3 +31,16 @@ def union_find_groups(ids, pair_list):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {i: min(j for j in ids if find(j) == find(i)) for i in ids}
+
+
+def group_jobs(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it started, counted in a
+    job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

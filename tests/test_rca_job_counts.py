@@ -9,6 +9,7 @@ import itertools
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import group_jobs
 
 from riskloc_spark import cli
 from riskloc_spark.sources import read_rca_csv_derived
@@ -33,24 +34,13 @@ def derived_case(tmp_path_factory):
     return str(d / "case.a.csv"), str(d / "case.b.csv")
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("algo", sorted(cli.ALGO_OPTIONS))
 def test_each_algorithm_costs_at_most_two_jobs_on_a_derived_case(spark, derived_case, algo):
-    (df, attrs), read_jobs = _jobs(
+    (df, attrs), read_jobs = group_jobs(
         spark, f"read-{algo}", lambda: read_rca_csv_derived(spark, *derived_case)
     )
     assert (attrs, read_jobs) == (["a", "b", "c"], 0)
-    causes, jobs = _jobs(
+    causes, jobs = group_jobs(
         spark, f"call-{algo}",
         lambda: cli.run_method(df, attrs, algo, True, dict(cli.ALGO_OPTIONS[algo])),
     )

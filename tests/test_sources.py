@@ -124,6 +124,7 @@ HEADERS = {
     "utf8_bom": "\ufeffa,b,real,predict\nx,y,1,2\n",
     "quoted_commas": '"a,1",b,"c, d",predict\nx,y,1,2\n',
     "doubled_quotes": '"a""1",b,"",predict\nx,y,1,2\n',
+    "backslash": 'a\\b,c\\,"d\\"e",real,predict\nx,y,z,w,1,2\n',
     "spaces": " a , b c,real,predict\nx,y,1,2\n",
     "crlf": "a,b,real,predict\r\nx,y,1,2\r\n",
     "duplicates": "a,a,real,predict\nx,y,1,2\n",
@@ -144,23 +145,9 @@ def test_csv_header_named_as_spark_names_it(spark, tmp_path, name):
     assert got.collect() == want.collect()
 
 
-def _group_jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+def test_read_rca_csv_starts_no_spark_job(spark, plain_csv):
+    from conftest import group_jobs
 
-
-def test_readers_start_no_spark_job(spark, plain_csv, tmp_path):
     path, _ = plain_csv
-    (df, attrs), jobs = _group_jobs(spark, "read-plain", lambda: read_rca_csv(spark, path))
+    (df, attrs), jobs = group_jobs(spark, "read-plain", lambda: read_rca_csv(spark, path))
     assert (attrs, jobs) == (["a", "b"], 0)
-    (df, attrs), jobs = _group_jobs(
-        spark, "read-derived", lambda: read_rca_csv_derived(spark, path, path)
-    )
-    assert (attrs, jobs) == (["a", "b"], 0)
-    assert df.count() == 3
