@@ -3167,8 +3167,8 @@ def hotspot_element_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def autoroot_nps_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """autoroot's NPS scoring interior (operators/autoroot.py _nps_terms +
-    the NPS/LF formulas of search_cluster) over layer-1 cuboids, with the
+    """autoroot's NPS scoring interior (functions/search_terms.py
+    nps_leaf_terms + nps, and the LF ratio) over layer-1 cuboids, with the
     |deviation|>0.2 relevant set standing in for a KDE cluster. Fused:
     every dimension rides one explode + one shared window + one groupBy
     (the per-dim loop ran a window, a relevant-count agg, and a join per
@@ -6390,8 +6390,8 @@ def _hotspot_element_stats_sql() -> str:
 
 
 def _autoroot_nps_sql() -> str:
-    """DuckDB twin of autoroot's _nps_terms + NPS/LF over layer-1 cuboids
-    (relevant set = |deviation| > 0.2)."""
+    """DuckDB twin of autoroot's NPS terms (search_terms.nps_leaf_terms)
+    + NPS/LF over layer-1 cuboids (relevant set = |deviation| > 0.2)."""
     parts = []
     for dim in RCA_ATTRIBUTES:
         parts.append(f"""
@@ -8033,7 +8033,7 @@ def _autoroot_kde_sql() -> str:
     e[i+1]), ends = minima + inf descending, cluster = MAX(end index)
     with end >= deviation; per-(element, cluster) x counts replace the
     fixed columns. The single-distinct-deviation early return
-    (kde_boundaries -> [inf]) is the nd > 1 guard."""
+    (kde_boundaries_weighted -> [inf]) is the nd > 1 guard."""
     estat_parts, x_parts = [], []
     for cid, layer, dims in _rca_cuboids():
         dims_sql = ", ".join(dims)

@@ -8,8 +8,8 @@ serves both the distributed and the driver-side pandas search: operands
 are Spark Columns or pandas Series, and ``ops`` is
 ``scores.SPARK_OPS`` or ``scores.NUMPY_OPS`` (see functions/scores.py).
 A per-element sum arrives as a window Column on Spark and, on the
-driver, as an ``np.bincount`` gathered back to the leaves (riskloc,
-hotspot) or a group ``transform`` (autoroot); a global total as a float.
+driver, as an ``np.bincount`` gathered back to the leaves; a global
+total as a float.
 """
 from __future__ import annotations
 

@@ -30,6 +30,7 @@ from riskloc_spark.functions.scores import (
     surprise,
 )
 from riskloc_spark.plans.collect import driver_leaves
+from riskloc_spark.plans.cuboid import CuboidElements, factorize_attributes
 
 _log = logging.getLogger(__name__)
 
@@ -84,6 +85,30 @@ def _scored_elements(df: DataFrame, dimensions: list[str], derived: bool) -> Dat
     return add_ep_and_surprise(elements, derived, merged_divide=len(dimensions))
 
 
+def _ranked(elements: DataFrame, teep: float, tep: float) -> DataFrame:
+    """Each dimension's elements in surprise-desc order (element-asc
+    tiebreak) with their row number ``rn``, the running EP of the
+    qualifying (ep > teep) elements ``cum_ep``, the running surprise of
+    all elements ``cum_surprise`` (the reference's asymmetry,
+    adtributor.py:32-37), and ``stop_rn``: the first qualifying row whose
+    cum_ep exceeds tep."""
+    w_full = Window.partitionBy("dimension").orderBy(
+        F.col("surprise").desc(), F.col("element").asc()
+    )
+    qual_ep = F.when(F.col("ep") > teep, F.col("ep")).otherwise(F.lit(0.0))
+    ranked = (
+        elements.withColumn("rn", F.row_number().over(w_full))
+        .withColumn("cum_ep", F.sum(qual_ep).over(w_full))
+        .withColumn("cum_surprise", F.sum("surprise").over(w_full))
+    )
+    return ranked.withColumn(
+        "stop_rn",
+        F.min(
+            F.when((F.col("ep") > teep) & (F.col("cum_ep") > tep), F.col("rn"))
+        ).over(Window.partitionBy("dimension")),
+    )
+
+
 def adtributor_candidates(
     df: DataFrame,
     dimensions: list[str],
@@ -94,22 +119,7 @@ def adtributor_candidates(
     """Declarative core of adtributor: the per-dimension candidate
     elements (surprise-ordered qualifying prefix until cum EP > tep), as a
     DataFrame — used directly by the oracle-checked query surface."""
-    elements = _scored_elements(df, dimensions, derived)
-    w_full = Window.partitionBy("dimension").orderBy(
-        F.col("surprise").desc(), F.col("element").asc()
-    )
-    qual_ep = F.when(F.col("ep") > teep, F.col("ep")).otherwise(F.lit(0.0))
-    ranked = (
-        elements.withColumn("rn", F.row_number().over(w_full))
-        .withColumn("cum_ep", F.sum(qual_ep).over(w_full))
-    )
-    w_dim = Window.partitionBy("dimension")
-    ranked = ranked.withColumn(
-        "stop_rn",
-        F.min(
-            F.when((F.col("ep") > teep) & (F.col("cum_ep") > tep), F.col("rn"))
-        ).over(w_dim),
-    )
+    ranked = _ranked(_scored_elements(df, dimensions, derived), teep, tep)
     return ranked.filter(
         (F.col("rn") <= F.col("stop_rn")) & (F.col("ep") > teep)
     ).select("dimension", "element", "ep", "surprise")
@@ -118,7 +128,8 @@ def adtributor_candidates(
 def _adtributor_pd(pdf, dimensions, teep, tep, k, derived):
     """adtributor's search over a collected leaf frame: the Spark path's
     ranking, prefix walk and top-k, on _scored_elements_pd's elements."""
-    el = _scored_elements_pd(pdf, dimensions, derived)
+    enc = factorize_attributes(pdf, dimensions)
+    el = _scored_elements_pd(pdf, enc, np.ones(len(pdf), dtype=bool), dimensions, derived)
     cands = []
     for d in dimensions:
         g = el[el["dimension"] == d].sort_values(
@@ -160,28 +171,9 @@ def adtributor(
     pdf = driver_leaves(df, dimensions, measures(derived), driver_rows, _log, "adtributor")
     if pdf is not None:
         return _adtributor_pd(pdf, dimensions, teep, tep, k, derived)
-    elements = _scored_elements(df, dimensions, derived)
-
-    # Walk elements in surprise-desc order. Note the reference's asymmetry
-    # (adtributor.py:32-37): cum_ep accumulates only qualifying (ep > teep)
-    # elements, but the candidate's surprise is the cumsum over ALL
-    # elements up to the stop row (label slice of the full sorted frame).
-    w_full = Window.partitionBy("dimension").orderBy(
-        F.col("surprise").desc(), F.col("element").asc()
-    )
-    qual_ep = F.when(F.col("ep") > teep, F.col("ep")).otherwise(F.lit(0.0))
-    ranked = (
-        elements.withColumn("rn", F.row_number().over(w_full))
-        .withColumn("cum_ep", F.sum(qual_ep).over(w_full))
-        .withColumn("cum_surprise", F.sum("surprise").over(w_full))
-    )
-    w_dim = Window.partitionBy("dimension")
-    ranked = ranked.withColumn(
-        "stop_rn",
-        F.min(
-            F.when((F.col("ep") > teep) & (F.col("cum_ep") > tep), F.col("rn"))
-        ).over(w_dim),
-    )
+    # Walk elements in surprise-desc order; the candidate's surprise is
+    # the cumsum over ALL elements up to the stop row (_ranked).
+    ranked = _ranked(_scored_elements(df, dimensions, derived), teep, tep)
     picked = ranked.filter(F.col("rn") <= F.col("stop_rn"))
 
     cands = (
@@ -287,11 +279,12 @@ def _refine_and_dedupe(explanatory_set, dimensions, make_child):
 
 
 # --------------------------------------------------------------------------
-# pandas recursive search (adaptive driver fast-path, same pattern as
+# driver-side search (adaptive fast-path, same pattern as
 # riskloc/autoroot/squeeze): the recursion launches a full
 # element aggregation per candidate element per depth — dozens of tiny
 # sequential Spark jobs. When the leaf frame is driver-sized, the whole
-# recursion runs vectorized locally; parity-tested vs the distributed path.
+# recursion runs locally on plans.cuboid's kernel over one encoding of the
+# leaves; parity-tested vs the distributed path.
 # --------------------------------------------------------------------------
 
 def _score_element_frame(el, n_dims: int, derived: bool):
@@ -309,22 +302,23 @@ def _score_element_frame(el, n_dims: int, derived: bool):
     return el
 
 
-def _scored_elements_pd(pdf, dimensions: list[str], derived: bool):
-    """_scored_elements on pandas: merge_dimensions, then EP + surprise
-    with merged_divide=len(dimensions)."""
+def _scored_elements_pd(pdf, enc, mask, dimensions: list[str], derived: bool):
+    """_scored_elements on the driver over the leaves ``mask`` selects:
+    each dimension's element sums from plans.cuboid's kernel over the one
+    encoding ``enc``, elements numbered by first appearance, then EP +
+    surprise with merged_divide=len(dimensions)."""
     import pandas as pd
 
     ms = measures(derived)
-    parts = []
+    cols: dict[str, list] = {"element": [], "dimension": [], **{m: [] for m in ms}}
     for d in dimensions:
-        g = (
-            pdf.groupby(pdf[d].astype(str), sort=False)[list(ms)]
-            .sum()
-            .reset_index(names="element")
-        )
-        g["dimension"] = d
-        parts.append(g)
-    el = pd.concat(parts, ignore_index=True)
+        g = CuboidElements(enc, [d], mask)
+        cols["element"].append(np.asarray(enc[d][1], dtype=object)[enc[d][0][g.first]])
+        cols["dimension"].append(np.full(g.n, d, dtype=object))
+        for m in ms:  # a null measure adds nothing, as pandas' sum skips it
+            x = pdf[m].to_numpy(dtype=float)[g.rows]
+            cols[m].append(g.sum(np.where(np.isnan(x), 0.0, x)))
+    el = pd.DataFrame({c: np.concatenate(v) for c, v in cols.items()})
     return _score_element_frame(el, len(dimensions), derived)
 
 
@@ -351,14 +345,21 @@ def _rev_candidates_from_elements(el, dimensions, teep, k):
 
 
 def _rev_rec_adtributor_pd(pdf, dimensions, teep, k, derived):
-    el = _scored_elements_pd(pdf, dimensions, derived)
-    explanatory_set = _rev_candidates_from_elements(el, dimensions, teep, k)
+    """The recursion on the driver: each child narrows a row mask over
+    one encoding of the leaves to its parent element's rows."""
+    enc = factorize_attributes(pdf, dimensions)
 
-    def make_child(cand_set, element, remaining):
-        sub = pdf[pdf[cand_set["dimension"]].astype(str) == element[0]]
-        return _rev_rec_adtributor_pd(sub, remaining, teep, k, derived)
+    def search(mask, dims):
+        el = _scored_elements_pd(pdf, enc, mask, dims, derived)
+        explanatory_set = _rev_candidates_from_elements(el, dims, teep, k)
 
-    return _refine_and_dedupe(explanatory_set, dimensions, make_child)
+        def make_child(cand_set, element, remaining):
+            codes, uniques = enc[cand_set["dimension"]]
+            return search(mask & (codes == uniques.get_loc(element[0])), remaining)
+
+        return _refine_and_dedupe(explanatory_set, dims, make_child)
+
+    return search(np.ones(len(pdf), dtype=bool), dimensions)
 
 
 def _rev_rec_distributed_fused(

@@ -1,6 +1,10 @@
 """AutoRoot: KDE deviation clustering + per-cluster cuboid search (NPS).
 
-Parity: reference algorithms/autoroot.py. Spark-first split of labor:
+Parity: reference algorithms/autoroot.py. The path is picked as riskloc
+picks it (plans.collect.driver_leaves): a leaf frame of at most
+``driver_rows`` rows is collected by the shared ``limit(k+1).toPandas()``
+probe and searched on the driver over plans.cuboid's integer-coded
+elements (_autoroot_driver). Above the bound the work splits as:
 
 * deviation scoring + relevance filter: distributed column algebra;
 * 1-D KDE (Silverman bandwidth) is fitted on the driver from DISTINCT
@@ -11,11 +15,13 @@ Parity: reference algorithms/autoroot.py. Spark-first split of labor:
   split; here ALL (cluster, cuboid, element) scores come from ONE
   explode + shuffle (_search_all_clusters — the riskloc _layer_scores
   pattern), and only the per-(cluster, cuboid) winners reach the driver.
-  The NPS terms are defined once, in functions.search_terms, for this
-  and the pandas path.
+
+Both paths fit the same weighted KDE (kde_boundaries_weighted) and take
+the NPS terms from functions.search_terms.
 """
 from __future__ import annotations
 
+import logging
 import math
 from typing import Any
 
@@ -24,9 +30,26 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from riskloc_spark.functions.scores import NUMPY_OPS, SPARK_OPS, add_deviation_score
+from riskloc_spark.functions.scores import (
+    NUMPY_OPS,
+    SPARK_OPS,
+    add_deviation_score,
+    deviation,
+)
 from riskloc_spark.functions.search_terms import nps, nps_leaf_terms, relative_error
-from riskloc_spark.plans.cuboid import cuboids_of_layer
+from riskloc_spark.plans.collect import driver_leaves
+from riskloc_spark.plans.cuboid import (
+    CuboidElements,
+    cuboids_of_layer,
+    elements_by_key,
+    factorize_attributes,
+)
+
+_log = logging.getLogger(__name__)
+
+# the distributed path's bound on the (distinct deviation, count) pairs it
+# collects for the KDE; past it a histogram of as many buckets stands in
+_MAX_KDE_PAIRS = 200_000
 
 
 def _boundaries_from_density(s: np.ndarray, e: np.ndarray) -> list[float]:
@@ -38,44 +61,26 @@ def _boundaries_from_density(s: np.ndarray, e: np.ndarray) -> list[float]:
     return sorted(np.concatenate((s[mi], [np.inf])).tolist(), reverse=True)
 
 
-def kde_boundaries(values: np.ndarray, density_fn=None) -> list[float]:
-    """Cluster boundaries: local minima of a Silverman-bandwidth gaussian
-    KDE evaluated on 400 points of [-2,2] (ref autoroot.py:30-47).
-    Returns the 'ends' list in descending order (inf first).
+def kde_boundaries_weighted(
+    values: np.ndarray, counts: np.ndarray, density_fn=None
+) -> list[float]:
+    """Cluster boundaries over (distinct deviation, count) pairs: local
+    minima of a Silverman-bandwidth gaussian KDE evaluated on 400 points
+    of [-2,2] (ref autoroot.py:30-47), every kernel weighted by its count,
+    so exact for the expanded array. Returns the 'ends' list in descending
+    order (inf first). Both paths collect O(distinct) pairs.
 
-    Implemented in numpy (scipy is not available in this environment):
+    Implemented in numpy, without scipy:
     Silverman factor for 1-D is (3n/4)^(-1/5), scaled by the sample std
     (ddof=1) — the same bandwidth scipy's gaussian_kde(bw='silverman')
     uses; minima are strict (e[i-1] > e[i] < e[i+1]), matching
     scipy.signal.argrelextrema(e, np.less).
 
     ``density_fn`` (oracle-gate injection — the density-level analogue
-    of ``cluster_ends``): (samples, values, counts|None) -> density
-    array replacing only the non-bit-portable exp() kernel sum; the
-    grid, minima detection, ends ordering, cluster assignment, and the
-    whole downstream search stay REAL (autoroot_kde_fixed gate)."""
-    if len(np.unique(values)) == 1:
-        return [float("inf")]
-    s = np.linspace(-2, 2, 400)
-    if density_fn is not None:
-        e = np.asarray(density_fn(s, values, None), float)
-    else:
-        n = len(values)
-        sigma = values.std(ddof=1)
-        h = sigma * (3.0 * n / 4.0) ** (-1.0 / 5.0)
-        # density at grid points: mean of gaussian kernels (n x 400)
-        z = (s[None, :] - values[:, None]) / h
-        e = np.exp(-0.5 * z * z).mean(axis=0) / (h * math.sqrt(2 * math.pi))
-    return _boundaries_from_density(s, e)
-
-
-def kde_boundaries_weighted(
-    values: np.ndarray, counts: np.ndarray, density_fn=None
-) -> list[float]:
-    """kde_boundaries over (distinct deviation, count) pairs — every
-    kernel weighted by its count; exact for the expanded array. Lets the
-    distributed path collect O(distinct) pairs instead of raw rows.
-    ``density_fn`` as in kde_boundaries (counts forwarded)."""
+    of ``cluster_ends``): (samples, values, counts) -> density array
+    replacing only the non-bit-portable exp() kernel sum; the grid,
+    minima detection, ends ordering, cluster assignment, and the whole
+    downstream search stay REAL (autoroot_kde_fixed gate)."""
     if len(values) == 1:
         return [float("inf")]
     s = np.linspace(-2, 2, 400)
@@ -102,42 +107,6 @@ def assign_clusters(df: DataFrame, ends: list[float]) -> DataFrame:
     for i, end in enumerate(ends):
         expr = F.when(F.col("deviation") <= F.lit(end), F.lit(i)).otherwise(expr)
     return df.withColumn("cluster", expr)
-
-
-def _nps_terms(
-    df: DataFrame, cuboid: list[str], exact_sums: bool = False
-) -> DataFrame:
-    """Per-element NPS building blocks over the FULL frame:
-    n_full, Ap_e = sum nan0(|v - f*Ve/Fe| / v), Bp_e = sum nan0(|v-f| / v).
-
-    ``exact_sums=True`` routes the window sums and the term sums through
-    DECIMAL(38,9) so aggregation is order-independent (used by the
-    ``autoroot_nps`` oracle gate; the search path keeps doubles)."""
-    w = Window.partitionBy(*cuboid)
-    if exact_sums:
-        Ve = F.sum(F.col("real").cast("decimal(38,9)")).over(w).cast("double")
-        Fe = F.sum(F.col("predict").cast("decimal(38,9)")).over(w).cast("double")
-    else:
-        Ve = F.sum("real").over(w)
-        Fe = F.sum("predict").over(w)
-    a_term, b_term = nps_leaf_terms(SPARK_OPS, F.col("real"), F.col("predict"), Ve, Fe)
-
-    def s(name):
-        c = F.col(name)
-        if exact_sums:
-            return F.sum(c.cast("decimal(38,9)")).cast("double")
-        return F.sum(c)
-
-    return (
-        df.withColumn("__a", a_term)
-        .withColumn("__b", b_term)
-        .groupBy(*cuboid)
-        .agg(
-            F.count(F.lit(1)).alias("n_full"),
-            s("__a").alias("Ap_e"),
-            s("__b").alias("Bp_e"),
-        )
-    )
 
 
 def _search_all_clusters(
@@ -308,98 +277,85 @@ def merge_root_causes(
     return causes
 
 
-def _search_cluster_driver(
-    pdf, cluster_pdf, attributes: list[str], delta_threshold: float,
-    z: int, totals: dict[str, float],
-) -> dict[str, Any] | None:
-    """Per-cluster cuboid search on pandas: the functions.search_terms
-    NPS formulas and the tie order of _search_all_clusters;
-    parity-tested against the distributed path."""
-    best: dict[str, Any] = {"avg": -1.0}
-    for layer in range(1, len(attributes) + 1):
-        for cuboid in cuboids_of_layer(attributes, layer):
-            if layer == len(attributes) and (1.0 / z) <= delta_threshold:
-                continue
-            xs = cluster_pdf.groupby(cuboid, sort=False).size().rename("x")
-            xs = xs[(xs / z) > delta_threshold]
-            if not len(xs):
-                continue
-
-            g = pdf.groupby(cuboid, sort=False)
-            a_term, b_term = nps_leaf_terms(
-                NUMPY_OPS, pdf["real"], pdf["predict"],
-                g["real"].transform("sum"), g["predict"].transform("sum"),
-            )
-            t = pdf.assign(__a=a_term, __b=b_term)
-            terms = t.groupby(cuboid, sort=False).agg(
-                n_full=("__a", "size"), Ap_e=("__a", "sum"), Bp_e=("__b", "sum")
-            )
-            joined = terms.join(xs, how="inner")
-            joined = joined[(joined["x"] / joined["n_full"]) > delta_threshold]
-            if not len(joined):
-                continue
-            joined = joined.assign(
-                NPS=nps(
-                    NUMPY_OPS, joined["Ap_e"], joined["Bp_e"], joined["n_full"],
-                    totals["N"], totals["Bp_tot"],
-                ),
-                LF=joined["x"] / joined["n_full"],
-            )
-            joined = joined.sort_index(kind="stable").sort_values(
-                "NPS", ascending=False, kind="stable"
-            )
-            row = joined.iloc[0]
-            key = row.name if layer > 1 else (row.name,)
-            CF = row["x"] / z
-            avg = (row["NPS"] + row["LF"] + CF) / 3
-            if avg > best["avg"]:
-                best = {
-                    "elements": [[str(k) for k in key]],
-                    "layer": layer,
-                    "cuboid": list(cuboid),
-                    "LF": float(row["LF"]),
-                    "CF": float(CF),
-                    "NPS": float(row["NPS"]),
-                    "avg": float(avg),
-                }
-    return best if "elements" in best else None
-
-
 def _autoroot_driver(
     pdf, attributes: list[str], delta_threshold: float,
     cluster_ends: list[float] | None = None,
     kde_density_fn=None,
 ) -> list[dict[str, Any]]:
-    """The full autoroot loop on a collected pandas leaf frame (attrs as
-    string, real, predict, deviation)."""
-    relevant = pdf[pdf["deviation"].abs() > 0.2]
-    if not len(relevant):
+    """The full autoroot loop on a collected leaf frame (driver_leaves:
+    attributes as strings, real, predict), with the NPS formulas and the
+    tie order of _search_all_clusters. Each cuboid's elements are grouped
+    once (plans.cuboid) and their NPS terms, which no cluster changes,
+    computed once; a cluster adds only its leaf count per element. The
+    first maximum NPS in element-key order wins."""
+    real = pdf["real"].to_numpy(dtype=float)
+    predict = pdf["predict"].to_numpy(dtype=float)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        dev = np.asarray(deviation(NUMPY_OPS, real, predict))
+        bp = relative_error(NUMPY_OPS, real, predict)
+    relevant = np.abs(dev) > 0.2
+    if not relevant.any():
         return []
     ends = (
         list(cluster_ends)
         if cluster_ends is not None
-        else kde_boundaries(relevant["deviation"].to_numpy(), kde_density_fn)
-    )
-    cl = np.full(len(relevant), -1)
-    for i, end in enumerate(ends):
-        cl = np.where(relevant["deviation"] <= end, i, cl)
-    relevant = relevant.assign(cluster=cl)
-
-    bp = relative_error(NUMPY_OPS, pdf["real"], pdf["predict"])
-    totals = {"N": float(len(pdf)), "Bp_tot": float(bp.sum())}
-
-    cluster_root_causes = []
-    for cluster in sorted(relevant["cluster"].unique()):
-        sub = relevant[relevant["cluster"] == cluster]
-        z = len(sub)
-        if z == 0:
-            continue
-        rc = _search_cluster_driver(
-            pdf, sub, attributes, delta_threshold, z, totals
+        else kde_boundaries_weighted(
+            *np.unique(dev[relevant], return_counts=True), kde_density_fn
         )
-        if rc is not None:
-            rc["cluster"] = int(cluster)
-            cluster_root_causes.append(rc)
+    )
+    cl = np.full(len(dev), -1)
+    for i, end in enumerate(ends):
+        cl = np.where(dev <= end, i, cl)
+    clusters = {int(c): relevant & (cl == c) for c in np.unique(cl[relevant])}
+    z_of = {c: int(m.sum()) for c, m in clusters.items()}
+    N, Bp_tot = float(len(pdf)), float(np.nansum(bp))
+
+    def nan0(x):  # a null measure adds nothing to a sum, as in Spark
+        return np.where(np.isnan(x), 0.0, x)
+
+    enc = factorize_attributes(pdf, attributes)
+    best: dict[int, dict[str, Any]] = {c: {"avg": -1.0} for c in clusters}
+    for layer in range(1, len(attributes) + 1):
+        # ref autoroot.py:99 — the leaf cuboid is skipped per cluster
+        live = [c for c in clusters
+                if layer < len(attributes) or (1.0 / z_of[c]) > delta_threshold]
+        if not live:
+            continue
+        for cuboid in cuboids_of_layer(attributes, layer):
+            g = CuboidElements(enc, cuboid, np.ones(len(dev), dtype=bool))
+            by_key, values = elements_by_key(enc, cuboid, g)
+            n_full = np.bincount(g.inv, minlength=g.n)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                a_term, b_term = nps_leaf_terms(
+                    NUMPY_OPS, real, predict,
+                    g.sum(nan0(real))[g.inv], g.sum(nan0(predict))[g.inv],
+                )
+                score = nps(NUMPY_OPS, g.sum(nan0(a_term)), g.sum(nan0(b_term)),
+                            n_full, N, Bp_tot)
+            ranked = np.where(np.isnan(score), -np.inf, score)  # NaN sorts last
+            for c in live:
+                z = z_of[c]
+                x = np.bincount(g.inv[clusters[c]], minlength=g.n)
+                ok = by_key[(x[by_key] / z > delta_threshold)
+                            & (x[by_key] / n_full[by_key] > delta_threshold)]
+                if not len(ok):
+                    continue
+                e = ok[np.argmax(ranked[ok])]
+                LF, CF = x[e] / n_full[e], x[e] / z
+                avg = (score[e] + LF + CF) / 3
+                if avg > best[c]["avg"]:
+                    best[c] = {
+                        "elements": [[str(v[e]) for v in values]],
+                        "layer": layer,
+                        "cuboid": list(cuboid),
+                        "LF": float(LF),
+                        "CF": float(CF),
+                        "NPS": float(score[e]),
+                        "avg": float(avg),
+                    }
+    cluster_root_causes = [
+        {**rc, "cluster": c} for c, rc in sorted(best.items()) if "elements" in rc
+    ]
     return merge_root_causes(cluster_root_causes, max_layer=len(attributes))
 
 
@@ -407,44 +363,34 @@ def autoroot(
     df: DataFrame,
     attributes: list[str],
     delta_threshold: float = 0.1,
-    max_kde_sample: int | None = None,
-    seed: int = 11,
     driver_rows: int | None = 200_000,
     cluster_ends: list[float] | None = None,
     kde_density_fn=None,
 ) -> list[dict[str, Any]]:
     """Reference autoroot.py:147-170.
 
-    Adaptive like riskloc: deviation scoring is distributed; when the
-    aggregated leaf frame is driver-sized (cheap limit-probe), the
-    KDE-cluster + per-cluster cuboid search runs vectorized on pandas
-    (the search launches dozens of tiny sequential jobs otherwise); both
-    paths evaluate the single NPS definitions in functions.search_terms
-    and are parity-tested. ``driver_rows=None``
-    forces the distributed path, where the KDE fits on bounded distinct
-    (deviation, count) pairs (``max_kde_sample`` overrides the 200k
-    bound; ``seed`` is kept for API compatibility — the path is now
-    deterministic) and the whole (cluster x cuboid) search is ONE
-    explode job (_search_all_clusters)."""
+    ``driver_rows`` picks the path as riskloc's does
+    (plans.collect.driver_leaves): at <= k leaves the ``limit(k+1).
+    toPandas()`` probe is the collect, and deviation scoring, the KDE
+    clustering and the per-cluster cuboid search run on the driver over
+    plans.cuboid's integer-coded elements, with no further Spark job.
+    Above k, or with ``None``, deviation scoring is distributed and the
+    whole (cluster x cuboid) search is ONE explode job
+    (_search_all_clusters). Both paths fit the KDE on distinct
+    (deviation, count) pairs (kde_boundaries_weighted), evaluate the
+    single NPS definitions in functions.search_terms and are
+    parity-tested. The path taken and why log at DEBUG."""
+    pdf = driver_leaves(df, attributes, ("real", "predict"), driver_rows, _log, "autoroot")
+    if pdf is not None:
+        return _autoroot_driver(
+            pdf, attributes, delta_threshold, cluster_ends, kde_density_fn
+        )
+
     df = add_deviation_score(df)
     for d in attributes:
         df = df.withColumn(
             d, F.coalesce(F.col(d).cast("string"), F.lit("None"))
         )
-
-    if driver_rows is not None:
-        # one action: limit-probe and collect fused (see riskloc)
-        pdf = (
-            df.select(*attributes, "real", "predict", "deviation")
-            .limit(driver_rows + 1)
-            .toPandas()
-        )
-        if len(pdf) <= driver_rows:
-            return _autoroot_driver(
-                pdf, attributes, delta_threshold, cluster_ends,
-                kde_density_fn,
-            )
-
     df = df.persist()
     try:
         rel_pred = F.abs(F.col("deviation")) > 0.2
@@ -454,7 +400,7 @@ def autoroot(
         # centers stands in — raw rows never reach the driver.
         # ``cluster_ends`` (injectable boundaries, e.g. for the
         # autoroot_search_fixed oracle gate) skips the KDE fit entirely.
-        B = max_kde_sample or 200_000
+        B = _MAX_KDE_PAIRS
         rows = None if cluster_ends is not None else (
             df.filter(rel_pred)
             .groupBy("deviation")

@@ -283,6 +283,9 @@ def _density_and_bins(
             edges = np.histogram_bin_edges(array, "auto").tolist()
         else:
             edges = _auto_bin_edges_weighted(array, counts)
+        # values an ulp apart give repeated edges, whose zero-width bins
+        # would make the densities NaN; distinct edges pass unchanged
+        edges = np.unique(edges).tolist()
         # reference-faithful padding (density_cluster.py:39): the LEFT
         # pad's range(-5, 0, -1) is EMPTY in Python — the reference has
         # the same expression, so only the right pad exists. Mirrored
@@ -531,33 +534,12 @@ def _locate_all(
     # the exploded frame has exactly TWO consumers since the r15 stats
     # materialization (the stats aggregation and the broadcast locate
     # join).  Re-deriving the explode per consumer from the persisted
-    # base beats materializing a (rows x cuboids) cache — the explode is
-    # cheap column algebra over cached rows, while pinning 15x the
-    # corpus as storage blocks pays memory-write bandwidth twice and
-    # competes with execution memory (the r15 checkpoint-regime rule:
-    # interleaved A/B measured 36.8 -> 27.9 s at 5.4M leaves and
-    # 12.3 -> 9.3 s at 562k, identical causes).  Conf-gated for
-    # deployments whose base frame is NOT cached (recompute would then
-    # re-scan storage twice): set spark.riskloc.squeeze.persistExplode
-    # true to pin the explode instead.
-    _pe_conf = df.sparkSession.conf.get(
-        "spark.riskloc.squeeze.persistExplode", None
-    )
-    if _pe_conf is None or not str(_pe_conf).strip():
-        # conf unset: the no-persist default is only safe/fast when the
-        # base frame is already cached (squeeze() persists df before
-        # calling).  A caller passing an UNPERSISTED frame would
-        # recompute the whole upstream once per consumer — and a
-        # nondeterministic upstream could feed the stats scan and the
-        # locate join inconsistent data — so pin the explode for that
-        # caller instead (ADVICE r15).
-        from pyspark import StorageLevel
-
-        persist_ex = df.storageLevel == StorageLevel.NONE
-    else:
-        persist_ex = str(_pe_conf).strip().lower() in (
-            "true", "1", "on", "yes"
-        )
+    # base (squeeze() persists df before calling) beats materializing a
+    # (rows x cuboids) cache — the explode is cheap column algebra over
+    # cached rows, while pinning 15x the corpus as storage blocks pays
+    # memory-write bandwidth twice and competes with execution memory
+    # (the r15 checkpoint-regime rule: interleaved A/B measured 36.8 ->
+    # 27.9 s at 5.4M leaves and 12.3 -> 9.3 s at 562k, identical causes).
     ex = df.select(
         F.explode(F.array(*structs)).alias("ce"),
         "real",
@@ -569,10 +551,7 @@ def _locate_all(
         F.col("ce.cid").alias("cid"), F.col("ce.elem").alias("elem"),
         "real", "predict", *measure_cols, "__cl", "__nm",
     )
-    if persist_ex:
-        ex = ex.persist()
     try:
-
         aggs = [F.count(F.lit(1)).alias("descents")]
         for c in range(n_cl):
             sel = (F.col("__cl") == c) | F.col("__nm")
@@ -834,8 +813,6 @@ def _locate_all(
             stats.unpersist()
         except Exception:
             pass
-        if persist_ex:
-            ex.unpersist()
     return results
 
 
@@ -923,6 +900,7 @@ def _squeeze_driver(
     from riskloc_spark.plans.cuboid import (
         CuboidElements,
         cuboids_of_layer,
+        elements_by_key,
         factorize_attributes,
     )
 
@@ -975,16 +953,12 @@ def _squeeze_driver(
                   for m in ("real_a", "predict_a", "real_b", "predict_b")}
     leaves = {"real": real, "predict": predict, "abs_dev": metrics,
               **{"sum_" + m: np.where(np.isnan(x), 0.0, x) for m, x in summed.items()}}
-    uniques = {a: np.asarray(u, dtype=object) for a, (_, u) in enc.items()}
-    value_rank = {a: np.argsort(np.argsort(u, kind="stable")) for a, u in uniques.items()}
     built: dict[tuple, tuple] = {}
 
     def cuboid_elements(cuboid):
         if tuple(cuboid) not in built:
             g = CuboidElements(enc, cuboid, np.ones(len(real), dtype=bool))
-            codes = [enc[d][0][g.first] for d in cuboid]
-            by_key = np.lexsort([value_rank[d][c] for d, c in zip(cuboid, codes)][::-1])
-            built[tuple(cuboid)] = (g, by_key, [uniques[d][c] for d, c in zip(cuboid, codes)])
+            built[tuple(cuboid)] = (g, *elements_by_key(enc, cuboid, g))
         return built[tuple(cuboid)]
 
     root_causes: list[str] = []

@@ -13,7 +13,8 @@ the driver over a compact stats table (``element_stats_all`` on Spark).
 
 Driver-side searches over a collected leaf frame group with
 ``factorize_attributes`` + ``CuboidElements``: integer codes, mixed-radix
-element ids and one ``np.bincount`` per per-element sum.
+element ids and one ``np.bincount`` per per-element sum;
+``elements_by_key`` gives the elements in key order, with their values.
 """
 from __future__ import annotations
 
@@ -73,6 +74,17 @@ class CuboidElements:
         ok = ~np.isnan(values)
         with np.errstate(invalid="ignore", divide="ignore"):
             return self.sum(np.where(ok, values, 0.0)) / self.sum(ok)
+
+
+def elements_by_key(enc: dict, cuboid: list[str], g: CuboidElements):
+    """``g``'s element ids in ascending key order (the tuple of their
+    string values; the distributed paths' order of the joined element key
+    while no value holds a character below ELEM_SEP), and per dimension
+    of ``cuboid`` each element's value, indexed by id."""
+    codes = [enc[d][0][g.first] for d in cuboid]
+    uniques = [np.asarray(enc[d][1], dtype=object) for d in cuboid]
+    ranks = [np.argsort(np.argsort(u, kind="stable"))[c] for u, c in zip(uniques, codes)]
+    return np.lexsort(ranks[::-1]), [u[c] for u, c in zip(uniques, codes)]
 
 
 # Gate-surface accumulator type. Validity envelope: casting each per-row

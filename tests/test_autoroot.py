@@ -1,12 +1,13 @@
-"""AutoRoot: KDE boundary parity vs scipy on driver, NPS decomposition vs
-direct numpy, end-to-end localization of an injected cause."""
+"""AutoRoot: KDE boundaries over (distinct deviation, count) pairs,
+driver-vs-distributed parity (tie order included), end-to-end
+localization of an injected cause."""
 import itertools
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from riskloc_spark.operators.autoroot import autoroot, kde_boundaries
+from riskloc_spark.operators.autoroot import autoroot, kde_boundaries_weighted
 
 
 def make_instance(seed=9, anomaly=("a2", "b1"), severity=0.7):
@@ -24,13 +25,14 @@ def make_instance(seed=9, anomaly=("a2", "b1"), severity=0.7):
 
 
 def test_kde_boundaries_single_value():
-    assert kde_boundaries(np.array([0.5, 0.5, 0.5])) == [float("inf")]
+    values = np.array([0.5, 0.5, 0.5])
+    assert kde_boundaries_weighted(*np.unique(values, return_counts=True)) == [float("inf")]
 
 
 def test_kde_boundaries_bimodal():
     rng = np.random.default_rng(0)
     vals = np.concatenate([rng.normal(-1, 0.05, 200), rng.normal(1, 0.05, 200)])
-    ends = kde_boundaries(vals)
+    ends = kde_boundaries_weighted(*np.unique(vals, return_counts=True))
     assert ends[0] == float("inf")
     assert len(ends) >= 2  # at least one interior minimum
     # the minimum separating the modes sits near 0
@@ -71,6 +73,24 @@ def test_autoroot_driver_vs_distributed_parity(spark):
             assert abs(f[s] - d[s]) < 1e-9, s
 
 
+def test_nps_tie_breaks_in_element_key_order_on_both_paths(spark):
+    """a=a1 and a=a2 hold identical leaves, so they tie exactly on NPS,
+    LF and CF in cuboid [a]; a2's rows come first. Both paths keep the
+    first maximum in element-key order: a1, not the first-appearing a2."""
+    rows = [
+        (a, b, 50.0 if a in ("a1", "a2") else 100.0, 100.0)
+        for a in ("a2", "a0", "a3", "a1")
+        for b in ("b0", "b1", "b2", "b3")
+    ]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["a", "b", "real", "predict"]))
+    fast = autoroot(df, ["a", "b"])
+    dist = autoroot(df, ["a", "b"], driver_rows=None)
+    assert [(c["cuboid"], c["elements"]) for c in fast] == [(["a"], [["a1"]])]
+    assert [(c["cuboid"], c["elements"]) for c in dist] == [(["a"], [["a1"]])]
+    for s in ("NPS", "LF", "CF", "avg"):
+        assert abs(fast[0][s] - dist[0][s]) < 1e-9, s
+
+
 def test_injectable_cluster_ends_dual_path_parity(spark):
     """cluster_ends (the oracle gate's KDE bypass) must produce
     identical causes on the driver and distributed paths."""
@@ -95,9 +115,9 @@ def test_injectable_cluster_ends_dual_path_parity(spark):
 def test_injected_density_dual_path_parity(spark):
     """kde_density_fn (the density-level injection behind the
     autoroot_kde_fixed gate) must produce identical causes on the
-    driver path (raw deviations) and the distributed path (distinct
-    (deviation, count) pairs) — box_density's count weighting makes the
-    two inputs exactly equivalent."""
+    driver path and the distributed path: both hand it distinct
+    (deviation, count) pairs, counted by numpy on one and by Spark on
+    the other."""
     from riskloc_spark.data import rca_events
     from riskloc_spark.operators.autoroot import autoroot
     from riskloc_spark.operators.squeeze import box_density

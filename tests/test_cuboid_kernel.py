@@ -9,7 +9,7 @@ import pytest
 from riskloc_spark.functions.scores import NUMPY_OPS, deviation
 from riskloc_spark.functions.search_terms import rescaled_abs_deviation, risk_scores
 from riskloc_spark.operators.riskloc import _element_scores, _leaf_terms, _riskloc_driver
-from riskloc_spark.plans.cuboid import CuboidElements, factorize_attributes
+from riskloc_spark.plans.cuboid import CuboidElements, elements_by_key, factorize_attributes
 
 ATTRS = ["a", "b", "c"]
 PRUNED_B = ["b1", "None"]
@@ -73,6 +73,19 @@ def test_elements_are_numbered_by_first_appearance():
     assert list(g.inv) == [0, 1, 0, 2, 2]
     assert list(g.first) == [0, 1, 3]
     assert g.n == 3
+
+
+def test_elements_by_key_orders_by_the_value_tuple():
+    """Element ids in ascending (a, b) string order whatever the order of
+    first appearance, with each element's values indexed by its id."""
+    pdf = pd.DataFrame({"a": ["q", "p", "q", "r", "p", "q"], "b": ["2", "1", "10", "2", "2", "2"]})
+    enc = factorize_attributes(pdf, ["a", "b"])
+    g = CuboidElements(enc, ["a", "b"], np.ones(len(pdf), dtype=bool))
+    by_key, values = elements_by_key(enc, ["a", "b"], g)
+    assert [tuple(v[e] for v in values) for e in by_key] == sorted(set(zip(pdf["a"], pdf["b"])))
+    assert [tuple(v[e] for v in values) for e in range(g.n)] == list(
+        dict.fromkeys(zip(pdf["a"], pdf["b"]))
+    )
 
 
 def test_mixed_radix_ids_stay_distinct_past_int64():

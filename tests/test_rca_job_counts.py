@@ -51,6 +51,7 @@ def test_each_algorithm_costs_at_most_two_jobs_on_a_derived_case(spark, derived_
 @pytest.mark.parametrize("algo,name", [
     ("riskloc", "riskloc"), ("hotspot", "hotspot"), ("squeeze", "squeeze"),
     ("adtributor", "adtributor"), ("r_adtributor", "rev_rec_adtributor"),
+    ("autoroot", "autoroot"),
 ])
 def test_operators_on_the_shared_probe_log_their_path(spark, derived_case, caplog, algo, name):
     import logging

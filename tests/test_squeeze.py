@@ -371,3 +371,27 @@ def test_auto_bin_edges_degenerate_zero_range_matches_numpy():
     edges = np.histogram_bin_edges(x, "auto")
     assert len(edges) == 2
     assert edges[0] == -0.25 and edges[1] == 0.75
+
+
+def test_density_cluster_on_values_an_ulp_apart_is_one_cluster():
+    """Deviations that differ only by an ulp give 'auto' repeated bin
+    edges; their zero-width bins must not turn the densities into NaN.
+    Such an input clusters as the exactly single-valued one does: one
+    range over all its members, on the raw and the weighted path."""
+    import warnings
+
+    equal = np.full(3, 0.6)
+    ulp = np.array([0.6, np.nextafter(0.6, 1.0), 0.6])
+    assert len(set(np.histogram_bin_edges(ulp, "auto").tolist())) < len(
+        np.histogram_bin_edges(ulp, "auto")
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for options in (SqueezeOptions(), SqueezeOptions(max_normal_deviation=0.2)):
+            ranges = density_cluster_1d(ulp, options)
+            assert ranges == [(ulp.min(), ulp.max())]
+            np.testing.assert_allclose(
+                ranges, density_cluster_1d(equal, options), rtol=0, atol=1e-15
+            )
+            vals, cnts = np.unique(ulp, return_counts=True)
+            assert density_cluster_1d_weighted(vals, cnts.astype(float), options) == ranges
